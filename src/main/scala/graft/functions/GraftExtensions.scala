@@ -128,7 +128,7 @@ object GraftExtensions {
         require(children.length == 2,
           s"graft_any_in_set expects (arr, set_literal_array), got ${children.length} args")
         SetKernels.ArrayAnyInSet(children.head,
-          new SetKernels.LongSortedSet(literalLongArray(children(1), "set")))
+          Payload(new SetKernels.LongSortedSet(literalLongArray(children(1), "set"))))
       }),
     (FunctionIdentifier("graft_count_in_set"),
       new ExpressionInfo(classOf[SetKernels.ArrayCountInSet].getName, "graft_count_in_set"),
@@ -136,7 +136,7 @@ object GraftExtensions {
         require(children.length == 2,
           s"graft_count_in_set expects (arr, set_literal_array), got ${children.length} args")
         SetKernels.ArrayCountInSet(children.head,
-          new SetKernels.LongSortedSet(literalLongArray(children(1), "set")))
+          Payload(new SetKernels.LongSortedSet(literalLongArray(children(1), "set"))))
       }),
     (FunctionIdentifier("graft_strip_lines_in_set"),
       new ExpressionInfo(classOf[SetKernels.StripLinesInSet].getName, "graft_strip_lines_in_set"),
@@ -144,7 +144,7 @@ object GraftExtensions {
         require(children.length == 2,
           s"graft_strip_lines_in_set expects (text, line_hash_literal_array), got ${children.length} args")
         SetKernels.StripLinesInSet(children.head,
-          new SetKernels.LongSortedSet(literalLongArray(children(1), "set")))
+          Payload(new SetKernels.LongSortedSet(literalLongArray(children(1), "set"))))
       }))
 
   /** A foldable array-of-integral expression (e.g. `array(1, 2, 3)`)

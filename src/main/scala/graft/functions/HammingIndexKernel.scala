@@ -120,13 +120,12 @@ object HammingIndexKernel {
     * hashes to their smallest id), enables [[MihIndex.minIdWithin]];
     * the optional rank payload (`rankBytes`/`rankInv`) enables the fused
     * candidate+verify probe [[MihIndex.idsBelowWithinRankDot]].
-    * Serializable — ships to executors as one codegen reference object;
-    * [[indexBytesPerRow]] is the per-row footprint formula builders size
-    * their shards with (24 B/row id-only at pieces=4; +rankLen+8 with
-    * the rank payload). */
+    * Ships to executors in a [[Payload]]; [[indexBytesPerRow]] is the
+    * per-row footprint formula builders size their shards with (24 B/row
+    * id-only at pieces=4; +rankLen+8 with the rank payload). */
   final class MihIndex(val hashes: Array[Long], val pieces: Int,
       val ids: Array[Long], val rankBytes: Array[Byte],
-      val rankInv: Array[Double]) extends Serializable {
+      val rankInv: Array[Double]) extends Payload.Sized {
 
     def this(hashes: Array[Long], pieces: Int) =
       this(hashes, pieces, null, null, null)
@@ -149,6 +148,11 @@ object HammingIndexKernel {
     private val rankLen =
       if (rankBytes == null || hashes.isEmpty) 0 else rankBytes.length / hashes.length
     private val rankMean = (rankLen - 1) / 2.0
+
+    def payloadBytes: Long =
+      hashes.length.toLong * indexBytesPerRow(pieces, ids != null, rankLen) +
+        bucketTableBytes(pieces)
+    override def toString: String = s"MihIndex(n=${hashes.length}, pieces=$pieces)"
 
     /** THE rank-reconstruction dot — `Σ q(i)·((b·0.5−mean)·inv)` in
       * ascending-i order, one definition for every collecting and
@@ -553,7 +557,7 @@ object HammingIndexKernel {
     * while slicing them per cell. */
   final class MihCellIndex(cellKeys: Array[Long], hashes: Array[Long],
       pieces: Int, ids: Array[Long], rankBytes: Array[Byte],
-      rankInv: Array[Double], maxTables: Int = 128) extends Serializable {
+      rankInv: Array[Double], maxTables: Int = 128) extends Payload.Sized {
     require(cellKeys.length == hashes.length &&
       ids != null && ids.length == hashes.length &&
       rankBytes != null && rankInv != null && rankInv.length == hashes.length,
@@ -633,6 +637,11 @@ object HammingIndexKernel {
       }
       (tables, micro)
     }
+
+    def payloadBytes: Long =
+      nRows.toLong * indexBytesPerRow(pieces, hasIds = true, rankLen) +
+        tableStats._1 * bucketTableBytes(pieces)
+    override def toString: String = s"MihCellIndex(n=$nRows, cells=${cells.size})"
 
     /** Number of populated cells and the largest cell's population —
       * the bound each probe's member scans now carry. */
@@ -726,8 +735,13 @@ object HammingIndexKernel {
     }
   }
 
-  case class HammingAnyWithin(child: Expression, index: MihIndex, maxDistance: Int)
-      extends UnaryExpression {
+  /** TRUE iff some corpus sketch lies within `maxDistance` of this row's
+    * sketch (see [[MihIndex.anyWithin]]). The index rides a [[Payload]]:
+    * embedded below 8 MB, a broadcast handle at or above it (~1.2 GB at
+    * the 50M-hash cap, which would otherwise re-ship inside every stage's
+    * and every micro-batch's task binary). */
+  case class HammingAnyWithin(child: Expression, index: Payload[MihIndex],
+      maxDistance: Int) extends UnaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
       s"maxDistance must be in [0, 64), got $maxDistance")
     override def prettyName: String = "graft_hamming_any_within"
@@ -739,23 +753,25 @@ object HammingIndexKernel {
         s"$prettyName expects bigint, got ${other.simpleString}")
     }
     override def nullSafeEval(input: Any): Any =
-      index.anyWithin(input.asInstanceOf[Long], maxDistance)
+      index.get().anyWithin(input.asInstanceOf[Long], maxDistance)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("mihIndex", index,
-        "graft.functions.HammingIndexKernel.MihIndex")
+      val idx = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihIndex", "mihIdx")
       nullSafeCodeGen(ctx, ev, h =>
-        s"${ev.value} = $ref.anyWithin($h, $maxDistance);")
+        s"${ev.value} = $idx.anyWithin($h, $maxDistance);")
     }
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
   /** Smallest within-radius corpus id (Long.MaxValue when none). */
-  case class HammingMinIdWithin(child: Expression, index: MihIndex, maxDistance: Int)
-      extends UnaryExpression {
+  case class HammingMinIdWithin(child: Expression, index: Payload[MihIndex],
+      maxDistance: Int) extends UnaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
       s"maxDistance must be in [0, 64), got $maxDistance")
-    require(index.ids != null, "HammingMinIdWithin needs an id-carrying MihIndex")
+    // Checked where the expression is built (the driver holds the
+    // structure on either arm).
+    require(index.get().ids != null, "HammingMinIdWithin needs an id-carrying MihIndex")
     override def prettyName: String = "graft_hamming_min_id_within"
     override def dataType: DataType = LongType
     override def nullable: Boolean = child.nullable
@@ -765,120 +781,35 @@ object HammingIndexKernel {
         s"$prettyName expects bigint, got ${other.simpleString}")
     }
     override def nullSafeEval(input: Any): Any =
-      index.minIdWithin(input.asInstanceOf[Long], maxDistance)
+      index.get().minIdWithin(input.asInstanceOf[Long], maxDistance)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("mihIndex", index,
-        "graft.functions.HammingIndexKernel.MihIndex")
+      val idx = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihIndex", "mihIdx")
       nullSafeCodeGen(ctx, ev, h =>
-        s"${ev.value} = $ref.minIdWithin($h, $maxDistance);")
+        s"${ev.value} = $idx.minIdWithin($h, $maxDistance);")
     }
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** Broadcast-backed twin of [[HammingAnyWithin]] (r14 — ADVICE): the
-    * plain expressions embed the index as a codegen reference object, so
-    * it rides EVERY stage's serialized task binary — ~1.2 GB re-shipped
-    * per stage (and per streaming micro-batch) at the 50M-hash cap. Here
-    * the task binary carries only the `Broadcast` handle; TorrentBroadcast
-    * serializes the index ONCE at creation and each executor fetches and
-    * caches it once for the broadcast's lifetime, across stages and
-    * micro-batches. The deserialized index is bound to a per-partition
-    * mutable slot at codegen init (one `value()` call per task, not per
-    * row). */
-  case class HammingAnyWithinBc(child: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int)
-      extends UnaryExpression {
-    require(maxDistance >= 0 && maxDistance < 64,
-      s"maxDistance must be in [0, 64), got $maxDistance")
-    override def prettyName: String = "graft_hamming_any_within_bc"
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects bigint, got ${other.simpleString}")
-    }
-    @transient private lazy val idx = bc.value
-    override def nullSafeEval(input: Any): Any =
-      idx.anyWithin(input.asInstanceOf[Long], maxDistance)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihIndex"
-      val bcRef = ctx.addReferenceObj("mihBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "mihIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, h =>
-        s"${ev.value} = $idxTerm.anyWithin($h, $maxDistance);")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** Broadcast-backed twin of [[HammingMinIdWithin]] — see
-    * [[HammingAnyWithinBc]] for the shipping rationale. */
-  case class HammingMinIdWithinBc(child: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int)
-      extends UnaryExpression {
-    require(maxDistance >= 0 && maxDistance < 64,
-      s"maxDistance must be in [0, 64), got $maxDistance")
-    // Driver-side check only: `bc.value` on the driver returns the local
-    // copy (no fetch) — executors never re-run this constructor body's
-    // requirement because the expression arrives there deserialized.
-    require(bc.value.ids != null, "HammingMinIdWithinBc needs an id-carrying MihIndex")
-    override def prettyName: String = "graft_hamming_min_id_within_bc"
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects bigint, got ${other.simpleString}")
-    }
-    @transient private lazy val idx = bc.value
-    override def nullSafeEval(input: Any): Any =
-      idx.minIdWithin(input.asInstanceOf[Long], maxDistance)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihIndex"
-      val bcRef = ctx.addReferenceObj("mihBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "mihIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, h =>
-        s"${ev.value} = $idxTerm.minIdWithin($h, $maxDistance);")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  def anyWithin(sketch: Column, index: MihIndex, maxDistance: Int): Column =
+  def anyWithin(sketch: Column, index: Payload[MihIndex], maxDistance: Int): Column =
     GraftSql.column(HammingAnyWithin(GraftSql.expression(sketch), index, maxDistance))
 
-  def minIdWithin(sketch: Column, index: MihIndex, maxDistance: Int): Column =
+  def minIdWithin(sketch: Column, index: Payload[MihIndex], maxDistance: Int): Column =
     GraftSql.column(HammingMinIdWithin(GraftSql.expression(sketch), index, maxDistance))
 
-  def anyWithin(sketch: Column,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int): Column =
-    GraftSql.column(HammingAnyWithinBc(GraftSql.expression(sketch), bc, maxDistance))
-
-  def minIdWithin(sketch: Column,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int): Column =
-    GraftSql.column(HammingMinIdWithinBc(GraftSql.expression(sketch), bc, maxDistance))
-
-  /** Broadcast-backed pair-emission probe: array of distinct corpus ids
-    * strictly below this row's own id within `maxDistance` of its sketch
-    * (see [[MihIndex.idsBelowWithin]]); `explode` the result to get the
-    * `(id_a, id_b)` candidate pairs. Broadcast-only — a pair-emitting
-    * probe only exists on the at-scale path, where an embedded index
-    * riding every task binary is exactly the defect the broadcast twins
-    * close. Null sketch or null id → null array. */
-  case class HammingIdsBelowWithinBc(left: Expression, right: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int)
+  /** Pair-emission probe: array of distinct corpus ids strictly below
+    * this row's own id within `maxDistance` of its sketch (see
+    * [[MihIndex.idsBelowWithin]]); `explode` the result to get the
+    * `(id_a, id_b)` candidate pairs. Null sketch or null id → null
+    * array. */
+  case class HammingIdsBelowWithin(left: Expression, right: Expression,
+      index: Payload[MihIndex], maxDistance: Int)
       extends BinaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
       s"maxDistance must be in [0, 64), got $maxDistance")
-    // Driver-side check (executors receive the expression deserialized).
-    require(bc.value.ids != null, "HammingIdsBelowWithinBc needs an id-carrying MihIndex")
-    override def prettyName: String = "graft_hamming_ids_below_within_bc"
+    require(index.get().ids != null, "HammingIdsBelowWithin needs an id-carrying MihIndex")
+    override def prettyName: String = "graft_hamming_ids_below_within"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = left.nullable || right.nullable
     override def checkInputDataTypes(): TypeCheckResult =
@@ -887,37 +818,32 @@ object HammingIndexKernel {
         case (l, r) => TypeCheckResult.TypeCheckFailure(
           s"$prettyName expects (bigint, bigint), got (${l.simpleString}, ${r.simpleString})")
       }
-    @transient private lazy val idx = bc.value
     override def nullSafeEval(hash: Any, selfId: Any): Any =
       org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        idx.idsBelowWithin(hash.asInstanceOf[Long], maxDistance,
+        index.get().idsBelowWithin(hash.asInstanceOf[Long], maxDistance,
           selfId.asInstanceOf[Long]))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihIndex"
-      val bcRef = ctx.addReferenceObj("mihBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "mihIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
+      val idx = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihIndex", "mihIdx")
       nullSafeCodeGen(ctx, ev, (h, id) =>
         s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($idxTerm.idsBelowWithin($h, $maxDistance, $id));
+           |  .fromPrimitiveArray($idx.idsBelowWithin($h, $maxDistance, $id));
            |""".stripMargin)
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
 
-  def idsBelowWithin(sketch: Column, selfId: Column,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex], maxDistance: Int): Column =
-    GraftSql.column(HammingIdsBelowWithinBc(GraftSql.expression(sketch),
-      GraftSql.expression(selfId), bc, maxDistance))
+  def idsBelowWithin(sketch: Column, selfId: Column, index: Payload[MihIndex],
+      maxDistance: Int): Column =
+    GraftSql.column(HammingIdsBelowWithin(GraftSql.expression(sketch),
+      GraftSql.expression(selfId), index, maxDistance))
 
-  /** Broadcast-backed FUSED candidate+verify pair probe — see
+  /** FUSED candidate+verify pair probe — see
     * [[MihIndex.idsBelowWithinRankDot]]. Children: (sketch bigint, own id
     * bigint, normalized rank vector array<double>). */
-  case class HammingIdsBelowWithinRankDotBc(first: Expression,
-      second: Expression, third: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex],
+  case class HammingIdsBelowWithinRankDot(first: Expression,
+      second: Expression, third: Expression, index: Payload[MihIndex],
       maxDistance: Int, minDot: Double)
       extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
@@ -927,9 +853,9 @@ object HammingIndexKernel {
     // construction instead (r15 ADVICE).
     require(java.lang.Double.isFinite(minDot),
       s"minDot must be finite, got $minDot")
-    require(bc.value.ids != null && bc.value.rankBytes != null,
-      "HammingIdsBelowWithinRankDotBc needs an id- and rank-carrying MihIndex")
-    override def prettyName: String = "graft_hamming_ids_below_within_rankdot_bc"
+    require(index.get().ids != null && index.get().rankBytes != null,
+      "HammingIdsBelowWithinRankDot needs an id- and rank-carrying MihIndex")
+    override def prettyName: String = "graft_hamming_ids_below_within_rankdot"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean =
       first.nullable || second.nullable || third.nullable
@@ -941,22 +867,18 @@ object HammingIndexKernel {
           s"$prettyName expects (bigint, bigint, array<double>), got " +
             s"(${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
       }
-    @transient private lazy val idx = bc.value
     override def nullSafeEval(hash: Any, selfId: Any, ranks: Any): Any =
       org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        idx.idsBelowWithinRankDot(hash.asInstanceOf[Long], maxDistance,
+        index.get().idsBelowWithinRankDot(hash.asInstanceOf[Long], maxDistance,
           selfId.asInstanceOf[Long],
           ranks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
             .toDoubleArray(), minDot))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihIndex"
-      val bcRef = ctx.addReferenceObj("mihBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "mihIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
+      val idx = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihIndex", "mihIdx")
       nullSafeCodeGen(ctx, ev, (h, id, r) =>
         s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($idxTerm.idsBelowWithinRankDot($h, $maxDistance, $id,
+           |  .fromPrimitiveArray($idx.idsBelowWithinRankDot($h, $maxDistance, $id,
            |    $r.toDoubleArray(), $minDot));
            |""".stripMargin)
     }
@@ -966,29 +888,26 @@ object HammingIndexKernel {
   }
 
   def idsBelowWithinRankDot(sketch: Column, selfId: Column, ranks: Column,
-      bc: org.apache.spark.broadcast.Broadcast[MihIndex],
-      maxDistance: Int, minDot: Double): Column =
-    GraftSql.column(HammingIdsBelowWithinRankDotBc(GraftSql.expression(sketch),
-      GraftSql.expression(selfId), GraftSql.expression(ranks), bc,
+      index: Payload[MihIndex], maxDistance: Int, minDot: Double): Column =
+    GraftSql.column(HammingIdsBelowWithinRankDot(GraftSql.expression(sketch),
+      GraftSql.expression(selfId), GraftSql.expression(ranks), index,
       maxDistance, minDot))
 
-  /** Broadcast-backed CELL-PARTITIONED fused pair probe over a
-    * [[MihCellIndex]] — the scale form of the rank-dot probe (r16):
-    * children (sketch bigint, own id bigint, normalized rank vector
-    * array<double>, probe cell keys array<bigint>). Emits
-    * `array<struct<id, hamming, spearman>>` — the verified pair WITH the
-    * values the probe computed, so the caller's downstream is a single
-    * explode, never a re-join/re-verify. */
-  case class HammingPairsBelowRankDotCellBc(first: Expression,
+  /** CELL-PARTITIONED fused pair probe over a [[MihCellIndex]] — the
+    * scale form of the rank-dot probe (r16): children (sketch bigint, own
+    * id bigint, normalized rank vector array<double>, probe cell keys
+    * array<bigint>). Emits `array<struct<id, hamming, spearman>>` — the
+    * verified pair WITH the values the probe computed, so the caller's
+    * downstream is a single explode, never a re-join/re-verify. */
+  case class HammingPairsBelowRankDotCell(first: Expression,
       second: Expression, third: Expression, fourth: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[MihCellIndex],
-      maxDistance: Int, minDot: Double)
+      index: Payload[MihCellIndex], maxDistance: Int, minDot: Double)
       extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
       s"maxDistance must be in [0, 64), got $maxDistance")
     require(java.lang.Double.isFinite(minDot),
       s"minDot must be finite, got $minDot")
-    override def prettyName: String = "graft_hamming_pairs_rankdot_cell_bc"
+    override def prettyName: String = "graft_hamming_pairs_rankdot_cell"
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("hamming", IntegerType, nullable = false),
@@ -1004,22 +923,18 @@ object HammingIndexKernel {
           s"$prettyName expects (bigint, bigint, array<double>, array<bigint>), " +
             s"got (${a.simpleString}, ${b.simpleString}, ${c.simpleString}, ${d.simpleString})")
       }
-    @transient private lazy val idx = bc.value
     override def nullSafeEval(hash: Any, selfId: Any, ranks: Any, cells: Any): Any =
-      idx.probeAsArrayData(hash.asInstanceOf[Long], selfId.asInstanceOf[Long],
+      index.get().probeAsArrayData(hash.asInstanceOf[Long], selfId.asInstanceOf[Long],
         ranks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
         cells.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
         maxDistance, minDot)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihCellIndex"
-      val bcRef = ctx.addReferenceObj("mihCellBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "mihCellIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
+      val idx = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihCellIndex", "mihCellIdx")
       // minDot emitted through raw long bits: always a compilable literal.
       val minDotBits = java.lang.Double.doubleToLongBits(minDot)
       nullSafeCodeGen(ctx, ev, (h, id, r, c) =>
-        s"""${ev.value} = $idxTerm.probeAsArrayData($h, $id, $r, $c,
+        s"""${ev.value} = $idx.probeAsArrayData($h, $id, $r, $c,
            |  $maxDistance, Double.longBitsToDouble(${minDotBits}L));
            |""".stripMargin)
     }
@@ -1029,11 +944,11 @@ object HammingIndexKernel {
   }
 
   def pairsBelowRankDotCell(sketch: Column, selfId: Column, ranks: Column,
-      probeCells: Column, bc: org.apache.spark.broadcast.Broadcast[MihCellIndex],
+      probeCells: Column, index: Payload[MihCellIndex],
       maxDistance: Int, minDot: Double): Column =
-    GraftSql.column(HammingPairsBelowRankDotCellBc(GraftSql.expression(sketch),
+    GraftSql.column(HammingPairsBelowRankDotCell(GraftSql.expression(sketch),
       GraftSql.expression(selfId), GraftSql.expression(ranks),
-      GraftSql.expression(probeCells), bc, maxDistance, minDot))
+      GraftSql.expression(probeCells), index, maxDistance, minDot))
 
   object MihCellIndex {
     /** Cells below this many rows store scan-all arrays instead of a

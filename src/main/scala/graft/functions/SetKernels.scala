@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   * per-row expression is stateless, streams through any plan position, and
   * whole-stage-codegen fuses it.
   *
-  * The set ships as a sorted array referenced once per plan
-  * (`addReferenceObj`, the [[CentroidKernels]] pattern): 8 bytes per
-  * element, binary search per probe. Sized for driver-collectable sets
+  * The set ships as a sorted array inside a [[Payload]] — embedded in the
+  * plan below 8 MB, broadcast at or above it: 8 bytes per element,
+  * binary search per probe. Sized for driver-collectable sets
   * (an eval benchmark's grams — 10^5..10^7 longs); corpus-scale sets
   * belong in a join.
   */
@@ -30,14 +30,15 @@ object SetKernels {
   private[functions] val NewlineUtf8: org.apache.spark.unsafe.types.UTF8String =
     org.apache.spark.unsafe.types.UTF8String.fromString("\n")
 
-  /** Sorted-array set with binary-search probes; shipped to executors as
-    * one codegen reference object. Equality/hashCode are CONTENT-based
+  /** Sorted-array set with binary-search probes; shipped to executors in
+    * a [[Payload]]. Equality/hashCode are CONTENT-based
     * with a precomputed hash, because the expression tree embeds this
     * object: plan canonicalization and codegen-cache keys compare
     * expressions repeatedly, and a structural Seq field would walk up to
     * 10^7 boxed elements on the driver per comparison (Spark's own InSet
     * wraps its literal set for the same reason). */
-  final class LongSortedSet(val sorted: Array[Long]) extends Serializable {
+  final class LongSortedSet(val sorted: Array[Long]) extends Payload.Sized {
+    def payloadBytes: Long = 8L * sorted.length
     override val hashCode: Int = java.util.Arrays.hashCode(sorted)
     override def equals(other: Any): Boolean = other match {
       case o: LongSortedSet =>
@@ -66,8 +67,8 @@ object SetKernels {
 
     /** [[StripLinesInSet]]'s evaluation body (interpreted + codegen paths
       * both land here): rebuild `text` with every line whose seed-42
-      * xxhash64 is a member removed. Lives on the set — the codegen
-      * reference object — per the kernel convention. */
+      * xxhash64 is a member removed. Lives on the set — the payload
+      * structure — per the kernel convention. */
     def stripLines(text: org.apache.spark.unsafe.types.UTF8String)
         : org.apache.spark.unsafe.types.UTF8String = {
       import org.apache.spark.unsafe.types.UTF8String
@@ -101,8 +102,13 @@ object SetKernels {
     }
   }
 
+  object LongSortedSet {
+    /** The set of `values` (copied, then sorted). */
+    def of(values: Array[Long]): LongSortedSet = new LongSortedSet(values.clone().sorted)
+  }
+
   sealed abstract class SetProbe extends UnaryExpression {
-    def set: LongSortedSet
+    def set: Payload[LongSortedSet]
     override def nullable: Boolean = true
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -114,14 +120,14 @@ object SetKernels {
   /** TRUE iff any element is in the set (see [[LongSortedSet.containsAny]]
     * for the null semantics). The set rides in the case class as the
     * content-hashed holder, so structural plan comparisons stay cheap. */
-  case class ArrayAnyInSet(child: Expression, set: LongSortedSet) extends SetProbe {
+  case class ArrayAnyInSet(child: Expression, set: Payload[LongSortedSet]) extends SetProbe {
     override def prettyName: String = "graft_any_in_set"
     override def dataType: DataType = BooleanType
     override def nullSafeEval(input: Any): Any =
-      set.containsAny(input.asInstanceOf[ArrayData])
+      set.get().containsAny(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("longSet", set,
-        "graft.functions.SetKernels.LongSortedSet")
+      val ref = Payload.bind(ctx, set, "graft.functions.SetKernels.LongSortedSet",
+        "longSet")
       val r = ctx.freshName("setRes")
       nullSafeCodeGen(ctx, ev, arr => s"""
         Object $r = $ref.containsAny($arr);
@@ -133,14 +139,14 @@ object SetKernels {
 
   /** Count of elements present in the set (null when any element is null —
     * the count is unknowable, see [[LongSortedSet.countIn]]). */
-  case class ArrayCountInSet(child: Expression, set: LongSortedSet) extends SetProbe {
+  case class ArrayCountInSet(child: Expression, set: Payload[LongSortedSet]) extends SetProbe {
     override def prettyName: String = "graft_count_in_set"
     override def dataType: DataType = LongType
     override def nullSafeEval(input: Any): Any =
-      set.countIn(input.asInstanceOf[ArrayData])
+      set.get().countIn(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("longSet", set,
-        "graft.functions.SetKernels.LongSortedSet")
+      val ref = Payload.bind(ctx, set, "graft.functions.SetKernels.LongSortedSet",
+        "longSet")
       val r = ctx.freshName("setRes")
       nullSafeCodeGen(ctx, ev, arr => s"""
         Object $r = $ref.countIn($arr);
@@ -159,7 +165,7 @@ object SetKernels {
     * seed-42 `XXH64.hashUTF8String` per line (bit-identical to the
     * `xxhash64(col)` key the frequency pass groups on), binary-search
     * probe, join survivors. Stateless, stream-safe, codegen'd. */
-  case class StripLinesInSet(child: Expression, set: LongSortedSet)
+  case class StripLinesInSet(child: Expression, set: Payload[LongSortedSet])
       extends UnaryExpression {
     import org.apache.spark.unsafe.types.UTF8String
     override def prettyName: String = "graft_strip_lines_in_set"
@@ -171,26 +177,23 @@ object SetKernels {
         s"$prettyName expects string, got ${other.simpleString}")
     }
     override def nullSafeEval(input: Any): Any =
-      set.stripLines(input.asInstanceOf[UTF8String])
+      set.get().stripLines(input.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("stripSet", set,
-        "graft.functions.SetKernels.LongSortedSet")
+      val ref = Payload.bind(ctx, set, "graft.functions.SetKernels.LongSortedSet",
+        "stripSet")
       nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.stripLines($t);")
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def anyInSet(arr: Column, values: Array[Long]): Column =
-    GraftSql.column(ArrayAnyInSet(GraftSql.expression(arr),
-      new LongSortedSet(values.clone().sorted)))
+  def anyInSet(arr: Column, set: Payload[LongSortedSet]): Column =
+    GraftSql.column(ArrayAnyInSet(GraftSql.expression(arr), set))
 
-  def stripLinesIn(text: Column, lineHashes: Array[Long]): Column =
-    GraftSql.column(StripLinesInSet(GraftSql.expression(text),
-      new LongSortedSet(lineHashes.clone().sorted)))
+  def stripLinesIn(text: Column, lineHashes: Payload[LongSortedSet]): Column =
+    GraftSql.column(StripLinesInSet(GraftSql.expression(text), lineHashes))
 
-  def countInSet(arr: Column, values: Array[Long]): Column =
-    GraftSql.column(ArrayCountInSet(GraftSql.expression(arr),
-      new LongSortedSet(values.clone().sorted)))
+  def countInSet(arr: Column, set: Payload[LongSortedSet]): Column =
+    GraftSql.column(ArrayCountInSet(GraftSql.expression(arr), set))
 
   /** Bloom-filter form of the long set: `bitsPerKey` bits per element
     * instead of 64, at the price of a tunable false-POSITIVE rate
@@ -205,8 +208,9 @@ object SetKernels {
     * double-hashing (`h1 + i*h2` over k probes) — the standard
     * Kirsch–Mitzenmacher construction. Content-based equality via the
     * precomputed hash, like [[LongSortedSet]]. */
-  final class LongBloomSet(val words: Array[Long], val k: Int) extends Serializable {
+  final class LongBloomSet(val words: Array[Long], val k: Int) extends Payload.Sized {
     require(words.nonEmpty && k >= 1, "empty bloom filter")
+    def payloadBytes: Long = 8L * words.length
     private val nBits: Long = words.length.toLong * 64L
     override val hashCode: Int = 31 * java.util.Arrays.hashCode(words) + k
     override def equals(other: Any): Boolean = other match {
@@ -313,7 +317,7 @@ object SetKernels {
   /** TRUE iff any element MIGHT be in the bloom set (no false negatives;
     * per-element false-positive rate set by the filter's sizing). Null
     * semantics mirror [[ArrayAnyInSet]]. */
-  case class ArrayAnyInBloom(child: Expression, set: LongBloomSet)
+  case class ArrayAnyInBloom(child: Expression, set: Payload[LongBloomSet])
       extends UnaryExpression {
     override def nullable: Boolean = true
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -324,10 +328,10 @@ object SetKernels {
     override def prettyName: String = "graft_any_in_bloom"
     override def dataType: DataType = BooleanType
     override def nullSafeEval(input: Any): Any =
-      set.containsAny(input.asInstanceOf[ArrayData])
+      set.get().containsAny(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomSet", set,
-        "graft.functions.SetKernels.LongBloomSet")
+      val ref = Payload.bind(ctx, set, "graft.functions.SetKernels.LongBloomSet",
+        "bloomSet")
       val r = ctx.freshName("setRes")
       nullSafeCodeGen(ctx, ev, arr => s"""
         Object $r = $ref.containsAny($arr);
@@ -337,189 +341,6 @@ object SetKernels {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def anyInBloom(arr: Column, values: Array[Long], bitsPerKey: Int = 20): Column =
-    GraftSql.column(ArrayAnyInBloom(GraftSql.expression(arr),
-      LongBloomSet.build(values, bitsPerKey)))
-
-  /** [[anyInBloom]] over a PREBUILT filter — for callers that construct
-    * the bloom without ever holding the key array (streamed builds). */
-  def anyInBloomSet(arr: Column, set: LongBloomSet): Column =
+  def anyInBloom(arr: Column, set: Payload[LongBloomSet]): Column =
     GraftSql.column(ArrayAnyInBloom(GraftSql.expression(arr), set))
-
-  // ------------------------------------------------- broadcast twins (r15)
-
-  /** Payload size at/above which the `*Auto` builders switch from
-    * embedding the set in the expression tree to a TorrentBroadcast
-    * handle. An embedded set rides `addReferenceObj`, i.e. EVERY stage's
-    * (and every streaming micro-batch's) serialized task binary re-ships
-    * it — ~400 MB per stage at the documented 50M-gram decontamination
-    * cap, the exact defect class the MihIndex broadcast twins closed in
-    * r14. A broadcast serializes once and is fetched+cached once per
-    * executor for its lifetime. Below the threshold the embedded form
-    * wins: no broadcast bookkeeping, and task binaries are small anyway
-    * (kernel benches live at 10^3..10^6 elements). 8 MB = 1M longs. */
-  val BroadcastThresholdBytes: Long = 8L << 20
-
-  type SetBc = org.apache.spark.broadcast.Broadcast[LongSortedSet]
-  type BloomBc = org.apache.spark.broadcast.Broadcast[LongBloomSet]
-
-  /** Broadcast-backed twin of [[ArrayAnyInSet]]: the task binary carries
-    * only the broadcast handle; the deserialized set binds to a
-    * per-partition mutable slot at codegen init (one `value()` call per
-    * task, not per row — the [[graft.functions.HammingIndexKernel]]
-    * pattern). */
-  case class ArrayAnyInSetBc(child: Expression, bc: SetBc)
-      extends UnaryExpression {
-    override def prettyName: String = "graft_any_in_set_bc"
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
-    @transient private lazy val set = bc.value
-    override def nullSafeEval(input: Any): Any =
-      set.containsAny(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = "graft.functions.SetKernels.LongSortedSet"
-      val bcRef = ctx.addReferenceObj("setBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val term = ctx.addMutableState(cls, "longSet",
-        v => s"$v = ($cls) $bcRef.value();")
-      val r = ctx.freshName("setRes")
-      nullSafeCodeGen(ctx, ev, arr => s"""
-        Object $r = $term.containsAny($arr);
-        ${ev.isNull} = ($r == null);
-        if (!${ev.isNull}) ${ev.value} = ((Boolean) $r).booleanValue();""")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Broadcast-backed twin of [[ArrayCountInSet]]. */
-  case class ArrayCountInSetBc(child: Expression, bc: SetBc)
-      extends UnaryExpression {
-    override def prettyName: String = "graft_count_in_set_bc"
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
-    @transient private lazy val set = bc.value
-    override def nullSafeEval(input: Any): Any =
-      set.countIn(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = "graft.functions.SetKernels.LongSortedSet"
-      val bcRef = ctx.addReferenceObj("setBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val term = ctx.addMutableState(cls, "longSet",
-        v => s"$v = ($cls) $bcRef.value();")
-      val r = ctx.freshName("setRes")
-      nullSafeCodeGen(ctx, ev, arr => s"""
-        Object $r = $term.countIn($arr);
-        ${ev.isNull} = ($r == null);
-        if (!${ev.isNull}) ${ev.value} = ((Long) $r).longValue();""")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Broadcast-backed twin of [[StripLinesInSet]]. */
-  case class StripLinesInSetBc(child: Expression, bc: SetBc)
-      extends UnaryExpression {
-    import org.apache.spark.unsafe.types.UTF8String
-    override def prettyName: String = "graft_strip_lines_in_set_bc"
-    override def nullable: Boolean = child.nullable
-    override def dataType: DataType = StringType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
-    }
-    @transient private lazy val set = bc.value
-    override def nullSafeEval(input: Any): Any =
-      set.stripLines(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = "graft.functions.SetKernels.LongSortedSet"
-      val bcRef = ctx.addReferenceObj("stripBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val term = ctx.addMutableState(cls, "stripSet",
-        v => s"$v = ($cls) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $term.stripLines($t);")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Broadcast-backed twin of [[ArrayAnyInBloom]]. */
-  case class ArrayAnyInBloomBc(child: Expression, bc: BloomBc)
-      extends UnaryExpression {
-    override def prettyName: String = "graft_any_in_bloom_bc"
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
-    @transient private lazy val set = bc.value
-    override def nullSafeEval(input: Any): Any =
-      set.containsAny(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cls = "graft.functions.SetKernels.LongBloomSet"
-      val bcRef = ctx.addReferenceObj("bloomBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val term = ctx.addMutableState(cls, "bloomSet",
-        v => s"$v = ($cls) $bcRef.value();")
-      val r = ctx.freshName("setRes")
-      nullSafeCodeGen(ctx, ev, arr => s"""
-        Object $r = $term.containsAny($arr);
-        ${ev.isNull} = ($r == null);
-        if (!${ev.isNull}) ${ev.value} = ((Boolean) $r).booleanValue();""")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  import org.apache.spark.sql.SparkSession
-
-  def broadcastSet(spark: SparkSession, values: Array[Long]): SetBc =
-    spark.sparkContext.broadcast(new LongSortedSet(values.clone().sorted))
-
-  def anyInSetBc(arr: Column, bc: SetBc): Column =
-    GraftSql.column(ArrayAnyInSetBc(GraftSql.expression(arr), bc))
-
-  def countInSetBc(arr: Column, bc: SetBc): Column =
-    GraftSql.column(ArrayCountInSetBc(GraftSql.expression(arr), bc))
-
-  def stripLinesInBc(text: Column, bc: SetBc): Column =
-    GraftSql.column(StripLinesInSetBc(GraftSql.expression(text), bc))
-
-  def anyInBloomBc(arr: Column, bc: BloomBc): Column =
-    GraftSql.column(ArrayAnyInBloomBc(GraftSql.expression(arr), bc))
-
-  private def bigSet(values: Array[Long]): Boolean =
-    values.length.toLong * 8L >= BroadcastThresholdBytes
-
-  /** [[anyInSet]] that broadcasts the set past [[BroadcastThresholdBytes]]
-    * (row-identical either way — the probe body is the same
-    * [[LongSortedSet]] method). Prefer these Auto forms at every call
-    * site whose set size is data-dependent. */
-  def anyInSetAuto(spark: SparkSession, arr: Column, values: Array[Long]): Column =
-    if (bigSet(values)) anyInSetBc(arr, broadcastSet(spark, values))
-    else anyInSet(arr, values)
-
-  def countInSetAuto(spark: SparkSession, arr: Column, values: Array[Long]): Column =
-    if (bigSet(values)) countInSetBc(arr, broadcastSet(spark, values))
-    else countInSet(arr, values)
-
-  def stripLinesInAuto(spark: SparkSession, text: Column, lineHashes: Array[Long]): Column =
-    if (bigSet(lineHashes)) stripLinesInBc(text, broadcastSet(spark, lineHashes))
-    else stripLinesIn(text, lineHashes)
-
-  /** [[anyInBloomSet]] that broadcasts the prebuilt filter past
-    * [[BroadcastThresholdBytes]] of bit-array payload. */
-  def anyInBloomSetAuto(spark: SparkSession, arr: Column, set: LongBloomSet): Column =
-    if (set.words.length.toLong * 8L >= BroadcastThresholdBytes)
-      anyInBloomBc(arr, spark.sparkContext.broadcast(set))
-    else anyInBloomSet(arr, set)
 }

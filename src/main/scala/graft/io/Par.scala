@@ -10,8 +10,9 @@ package graft.io
   *  - only for actions with NO data- or crash-ordering dependency;
   *  - the session's thread-local job description is not propagated —
   *    callers that care set it inside each branch;
-  *  - failures: the first throwable wins, the other branch is awaited
-  *    (Spark actions are not interrupted mid-flight), then it is rethrown.
+  *  - failures: every branch is awaited (Spark actions are not
+  *    interrupted mid-flight); the first throwable in argument order is
+  *    rethrown with the others attached via `addSuppressed`.
   */
 object Par {
 
@@ -27,8 +28,7 @@ object Par {
     t.join()
     (ra, rb) match {
       case (Right(x), Right(y)) => (x, y)
-      case (Left(e), _) => throw e
-      case (_, Left(e)) => throw e
+      case _ => throw firstFailure(Seq(ra, rb)).get
     }
   }
 
@@ -45,7 +45,16 @@ object Par {
       t
     }
     ts.foreach(_.join())
-    results.collectFirst { case Left(e) => throw e }
+    firstFailure(results.toSeq).foreach(e => throw e)
     results.toSeq.map(_.toOption.get.asInstanceOf[A])
+  }
+
+  /** The first failure, carrying every later one as suppressed. */
+  private def firstFailure(rs: Seq[Either[Throwable, Any]]): Option[Throwable] = {
+    val errs = rs.collect { case Left(e) => e }
+    errs.headOption.map { first =>
+      errs.tail.filter(_ ne first).foreach(first.addSuppressed)
+      first
+    }
   }
 }

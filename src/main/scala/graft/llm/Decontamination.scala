@@ -157,8 +157,8 @@ object Decontamination {
       textCol: String, n: Int): DataFrame = {
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val sh = graft.functions.ShingleSketch.sketch(toks, n, 0).getField("sh")
-    val contaminated = graft.functions.SetKernels.anyInSetAuto(
-      df.sparkSession, sh, evalGrams)
+    val contaminated = graft.functions.SetKernels.anyInSet(sh,
+      graft.functions.Payload(graft.functions.SetKernels.LongSortedSet.of(evalGrams)))
     df.where(col(textCol).isNull || !coalesce(contaminated, lit(false)))
   }
 
@@ -226,9 +226,9 @@ object Decontamination {
     val evalGrams: Array[Long] = grams.collect().map(_.getLong(0))
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val sh = graft.functions.ShingleSketch.sketch(toks, n, 0).getField("sh")
-    val contaminated = graft.functions.SetKernels.anyInBloomSetAuto(
-      stream.sparkSession, sh,
-      graft.functions.SetKernels.LongBloomSet.build(evalGrams, bitsPerKey))
+    val contaminated = graft.functions.SetKernels.anyInBloom(sh,
+      graft.functions.Payload(
+        graft.functions.SetKernels.LongBloomSet.build(evalGrams, bitsPerKey)))
     stream.where(col(textCol).isNull || !coalesce(contaminated, lit(false)))
   }
 

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.functions.Payload
+import graft.functions.SetKernels.LongSortedSet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -682,9 +684,10 @@ object Dedup {
     * `maxCorpusImages`. True footprint at pieces=4 (r14 — the old
     * estimate undercounted): 8 B hash + 16 B bucket members (4 ints) per
     * hash plus ~1 MB of fixed offsets — ~24 B/hash, ≈1.2 GB at the 50M
-    * cap; the probe call sites wrap it in a `Broadcast`, so executors
-    * fetch it ONCE for the broadcast's lifetime (across stages and
-    * micro-batches) instead of once per stage inside the task binary.
+    * cap; the probe call sites wrap it in a [[graft.functions.Payload]],
+    * so past 8 MB executors fetch it ONCE for the broadcast's lifetime
+    * (across stages and micro-batches) instead of once per stage inside
+    * the task binary.
     * Past the cap, shard the corpus into several guards or use the batch
     * pigeonhole join ([[nearDupHamming64]]). */
   def pHashIndex(corpus: DataFrame, phashCol: String, pieces: Int = 4,
@@ -763,16 +766,12 @@ object Dedup {
     val est = df.where(col(phashCol).isNotNull)
       .agg(approx_count_distinct(col(phashCol), 0.02)).collect()(0).getLong(0)
     if (est <= (maxCorpusImages * 0.9).toLong) {
-      // Broadcast, don't embed (r14 — ADVICE): as a plain codegen
-      // reference object the index rides every stage's serialized task
-      // binary (~1.2 GB/stage at the cap); as a Broadcast the task binary
-      // carries a handle and each executor fetches the index once. The
-      // handle stays referenced by the returned plan; the ContextCleaner
-      // reclaims the broadcast when the plan is garbage-collected.
-      val bc = df.sparkSession.sparkContext.broadcast(
-        pHashIdIndex(df, idCol, phashCol, pieces, maxCorpusImages))
+      // The payload stays referenced by the returned plan; on the
+      // broadcast arm the ContextCleaner reclaims the broadcast when the
+      // plan is garbage-collected.
+      val index = Payload(pHashIdIndex(df, idCol, phashCol, pieces, maxCorpusImages))
       df.where(col(phashCol).isNull ||
-        K.minIdWithin(h, bc, maxDistance) >= col(idCol).cast("long"))
+        K.minIdWithin(h, index, maxDistance) >= col(idCol).cast("long"))
     } else {
       // +6% headroom over the HLL estimate (3σ at 2% rsd), shards sized
       // to 90% of the cap so uniform xxhash64 shard skew can't overflow
@@ -786,21 +785,21 @@ object Dedup {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         // slim (id, hash) frame: passes never re-decode
       (0 until nShards).foreach { s =>
-        // Per-pass broadcast: executors fetch this shard's index once;
-        // the eager localCheckpoint below materializes the pass, after
-        // which the explicit unpersist frees the executor copies before
-        // the next shard's index builds (peak = ONE index, as documented).
-        val bc = df.sparkSession.sparkContext.broadcast(
+        // Per-pass payload: the eager localCheckpoint below materializes
+        // the pass, after which release() frees the executor copies of a
+        // broadcast index before the next shard's index builds (peak =
+        // ONE index, as documented).
+        val index = Payload(
           pHashIdIndex(acc.where(col("__h").isNotNull &&
             shardOf === s.toLong), "__id", "__h", pieces, maxCorpusImages))
         val prev = acc
         acc = acc.withColumn("__min", least(col("__min"),
-            coalesce(K.minIdWithin(col("__h"), bc, maxDistance),
+            coalesce(K.minIdWithin(col("__h"), index, maxDistance),
               lit(Long.MaxValue))))
           .localCheckpoint(true,
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         // retire this shard's index reference state
-        bc.unpersist(blocking = false)
+        index.release()
         org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
           .foreach(_.unpersist(blocking = false))
       }
@@ -823,15 +822,13 @@ object Dedup {
   def streamPHashGuard(stream: DataFrame,
       index: graft.functions.HammingIndexKernel.MihIndex,
       phashCol: String, maxDistance: Int = 3): DataFrame = {
-    // Broadcast once here (r14 — ADVICE): the guard's plan is reused by
-    // EVERY micro-batch, so an embedded index would re-ship inside each
-    // micro-batch's task binary (~1.2 GB at the 50M-hash cap); the
-    // broadcast is fetched and cached once per executor for the life of
-    // the streaming query.
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
+    // The guard's plan is reused by EVERY micro-batch: past 8 MB the
+    // payload is a broadcast, fetched and cached once per executor for
+    // the life of the streaming query instead of re-shipped inside each
+    // micro-batch's task binary (~1.2 GB at the 50M-hash cap).
     stream.withColumn("img_near_dup", coalesce(
       graft.functions.HammingIndexKernel.anyWithin(
-        col(phashCol).cast("long"), bc, maxDistance), lit(false)))
+        col(phashCol).cast("long"), Payload(index), maxDistance), lit(false)))
   }
 
   /** STATELESS streaming AUDIO near-dup guard against a static corpus
@@ -852,11 +849,10 @@ object Dedup {
       index: graft.functions.HammingIndexKernel.MihIndex,
       binCol: String, maxDistance: Int = 3,
       spectral: Boolean = true): DataFrame = {
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
     val sketch = Multimodal.mediaSketch64(col(binCol),
       if (spectral) "audio_spectral" else "audio_energy")
     stream.withColumn("audio_near_dup", coalesce(
-      graft.functions.HammingIndexKernel.anyWithin(sketch, bc, maxDistance),
+      graft.functions.HammingIndexKernel.anyWithin(sketch, Payload(index), maxDistance),
       lit(false)))
   }
 
@@ -875,11 +871,10 @@ object Dedup {
       index: graft.functions.HammingIndexKernel.MihIndex,
       binCol: String, maxDistance: Int = 4,
       profile: Boolean = false): DataFrame = {
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
     val sketch = Multimodal.mediaSketch64(col(binCol),
       if (profile) "video_profile" else "video_payload")
     stream.withColumn("video_near_dup", coalesce(
-      graft.functions.HammingIndexKernel.anyWithin(sketch, bc, maxDistance),
+      graft.functions.HammingIndexKernel.anyWithin(sketch, Payload(index), maxDistance),
       lit(false)))
   }
 
@@ -907,10 +902,9 @@ object Dedup {
       index: graft.functions.HammingIndexKernel.MihCellIndex,
       binCol: String, maxDistance: Int = 14,
       minSpearman: Double = 0.85, flatIndex: Boolean = false): DataFrame = {
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
     stream.withColumn("video_near_dup", coalesce(
-      Multimodal.videoProfileVerified(col(binCol), bc, maxDistance, minSpearman,
-        flatIndex),
+      Multimodal.videoProfileVerified(col(binCol), Payload(index), maxDistance,
+        minSpearman, flatIndex),
       lit(false)))
   }
 
@@ -936,10 +930,10 @@ object Dedup {
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
       .getField("sig")
-    // Auto form (r15): a corpus-scale band index past the 8 MB threshold
-    // rides a broadcast handle instead of every micro-batch's task binary.
-    val hits = graft.functions.SetKernels.countInSetAuto(stream.sparkSession,
-      lshBandKeys(sig, bands, rowsPerBand), bandIndex)
+    // A corpus-scale band index past the 8 MB threshold rides a broadcast
+    // handle instead of every micro-batch's task binary.
+    val hits = graft.functions.SetKernels.countInSet(
+      lshBandKeys(sig, bands, rowsPerBand), Payload(LongSortedSet.of(bandIndex)))
     stream
       .withColumn("nd_bands_hit", coalesce(hits, lit(0L)))
       .withColumn("nd_candidate", col("nd_bands_hit") >= 1L)
@@ -990,10 +984,10 @@ object Dedup {
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
       .getField("sig")
-    // Auto form (r15): a guard bloom is ~750 MB at its 300M-key ceiling —
-    // broadcast past the threshold rather than re-shipped per micro-batch.
-    val hit = graft.functions.SetKernels.anyInBloomSetAuto(stream.sparkSession,
-      lshBandKeys(sig, bands, rowsPerBand), bloom)
+    // A guard bloom is ~750 MB at its 300M-key ceiling — broadcast past
+    // the threshold rather than re-shipped per micro-batch.
+    val hit = graft.functions.SetKernels.anyInBloom(
+      lshBandKeys(sig, bands, rowsPerBand), Payload(bloom))
     stream.withColumn("nd_candidate", coalesce(hit, lit(false)))
   }
 
@@ -1384,8 +1378,8 @@ object Dedup {
   def stripFrequentLinesWith(df: DataFrame, textCol: String,
       lineHashes: Array[Long]): DataFrame =
     df.withColumn(textCol,
-      graft.functions.SetKernels.stripLinesInAuto(df.sparkSession,
-        col(textCol), lineHashes))
+      graft.functions.SetKernels.stripLinesIn(col(textCol),
+        Payload(LongSortedSet.of(lineHashes))))
 
   // -------------------------------------------------- embedding near-dup
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.Payload
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -1824,12 +1825,11 @@ object Multimodal {
         // Single resident index over the whole corpus — one pass.
         val rows = slim.select(col("__id"), col("__h"), col("__r2"), col("__c"))
           .collect()
-        val bc = df.sparkSession.sparkContext.broadcast(
-          buildCellIndex(rows, onIndexStats))
+        val index = Payload(buildCellIndex(rows, onIndexStats))
         pairs = slim.select(col("__id").as("__idb"),
           explode(K.pairsBelowRankDotCell(col("__h"), col("__id"),
-            col("__r"), probeCells, bc, maxDistance, minSpearman)).as("__hit"))
-        // ContextCleaner reclaims bc with the plan.
+            col("__r"), probeCells, index, maxDistance, minSpearman)).as("__hit"))
+        // A broadcast arm is reclaimed by the ContextCleaner with the plan.
       } else {
         // CELL-GROUPED multi-pass (r16): past the byte budget, shards are
         // GROUPS OF WHOLE CELLS (cells sorted by packed key so adjacent
@@ -1878,20 +1878,19 @@ object Multimodal {
           val rows = indexSide
             .select(col("__id"), col("__h"), col("__r2"), col("__c")).collect()
           if (rows.nonEmpty) { // a hash sub-shard can be empty at small n
-            val bc = df.sparkSession.sparkContext.broadcast(
-              buildCellIndex(rows, onIndexStats))
+            val index = Payload(buildCellIndex(rows, onIndexStats))
             // Probe side: only rows whose neighborhood touches this
             // group's cells — the pass-count lever.
             val pass = slim
               .where(arrays_overlap(probeCells, typedLit(cells.toSeq)))
               .select(col("__id").as("__idb"),
                 explode(K.pairsBelowRankDotCell(col("__h"), col("__id"),
-                  col("__r"), probeCells, bc, maxDistance, minSpearman))
+                  col("__r"), probeCells, index, maxDistance, minSpearman))
                   .as("__hit"))
             // Peak reference state = ONE index: materialize the pass,
             // then free this group's executor copies before the next builds.
             val mat = pass.localCheckpoint(true, Dedup.CandLevel)
-            bc.unpersist(blocking = false)
+            index.release()
             pairs = if (pairs == null) mat else pairs.unionByName(mat)
           }
         }
@@ -1900,7 +1899,7 @@ object Multimodal {
         pairs = slim.limit(0).select(col("__id").as("__idb"),
           explode(K.pairsBelowRankDotCell(col("__h"), col("__id"),
             col("__r"), probeCells,
-            df.sparkSession.sparkContext.broadcast(new K.MihCellIndex(
+            Payload(new K.MihCellIndex(
               Array.emptyLongArray, Array.emptyLongArray, 4,
               Array.emptyLongArray, Array.emptyByteArray,
               Array.emptyDoubleArray)), maxDistance, minSpearman)).as("__hit"))
@@ -2591,11 +2590,11 @@ object Multimodal {
   def mediaSketch64(bin: Column, kind: String): Column =
     GraftSql.column(MediaSketch64(GraftSql.expression(bin), kind))
 
-  /** Per-row VERIFIED re-encode probe behind [[VideoProfileVerifiedBc]]
+  /** Per-row VERIFIED re-encode probe behind [[VideoProfileVerified]]
     * (r17) — public-static so generated code can call it. One container
     * walk yields the signature bits, the rank vector AND the cell key
     * (exactly the [[videoProfilePairs]] feature parse), then the
-    * broadcast cell index runs the SAME candidate expansion + exact XOR
+    * cell index runs the SAME candidate expansion + exact XOR
     * + exact Spearman dot as the batch pair probe over the same 3×3
     * duration×fps neighborhood, early-out on the first verified hit —
     * so a streaming flag is precisely "the batch pair operator would
@@ -2625,12 +2624,11 @@ object Multimodal {
   /** STREAMING-SAFE verified video re-encode guard expression (r17):
     * binary payload in, boolean "a corpus video within the signature
     * radius ALSO passes the exact Spearman verify" out — one stateless
-    * scalar projection riding a broadcast [[videoProfileIndex]] handle,
+    * scalar projection riding a [[videoProfileIndex]] [[Payload]],
     * dispatching to [[profileVerifiedHitOf]] in both the interpreted and
     * generated paths. */
-  case class VideoProfileVerifiedBc(child: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.HammingIndexKernel.MihCellIndex],
+  case class VideoProfileVerified(child: Expression,
+      index: Payload[graft.functions.HammingIndexKernel.MihCellIndex],
       maxDistance: Int, minSpearman: Double,
       flatIndex: Boolean = false) extends UnaryExpression {
     require(maxDistance >= 0 && maxDistance < 64,
@@ -2639,7 +2637,7 @@ object Multimodal {
     // non-finite threshold at construction anyway (the r15 ADVICE rule).
     require(java.lang.Double.isFinite(minSpearman),
       s"minSpearman must be finite, got $minSpearman")
-    override def prettyName: String = "graft_video_profile_verified_bc"
+    override def prettyName: String = "graft_video_profile_verified"
     override def dataType: DataType = BooleanType
     override def nullable: Boolean = true // unprofiled bytes -> null
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -2647,19 +2645,15 @@ object Multimodal {
       case other => TypeCheckResult.TypeCheckFailure(
         s"$prettyName expects binary, got ${other.simpleString}")
     }
-    @transient private lazy val idx = bc.value
     override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
       val b = child.eval(input)
       if (b == null) null
-      else profileVerifiedHitOf(b.asInstanceOf[Array[Byte]], idx,
+      else profileVerifiedHitOf(b.asInstanceOf[Array[Byte]], index.get(),
         maxDistance, minSpearman, flatIndex)
     }
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val idxCls = "graft.functions.HammingIndexKernel.MihCellIndex"
-      val bcRef = ctx.addReferenceObj("profileBc", bc,
-        "org.apache.spark.broadcast.Broadcast")
-      val idxTerm = ctx.addMutableState(idxCls, "profileIdx",
-        v => s"$v = ($idxCls) $bcRef.value();")
+      val idxTerm = Payload.bind(ctx, index,
+        "graft.functions.HammingIndexKernel.MihCellIndex", "profileIdx")
       val minDotBits = java.lang.Double.doubleToLongBits(minSpearman)
       val childGen = child.genCode(ctx)
       val boxed = ctx.freshName("verifiedBoxed")
@@ -2679,12 +2673,11 @@ object Multimodal {
       copy(child = c)
   }
 
-  /** Column form of [[VideoProfileVerifiedBc]]. */
+  /** Column form of [[VideoProfileVerified]]. */
   def videoProfileVerified(bin: Column,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.HammingIndexKernel.MihCellIndex],
+      index: Payload[graft.functions.HammingIndexKernel.MihCellIndex],
       maxDistance: Int, minSpearman: Double,
       flatIndex: Boolean = false): Column =
-    GraftSql.column(VideoProfileVerifiedBc(GraftSql.expression(bin), bc,
+    GraftSql.column(VideoProfileVerified(GraftSql.expression(bin), index,
       maxDistance, minSpearman, flatIndex))
 }

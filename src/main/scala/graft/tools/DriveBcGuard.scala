@@ -3,14 +3,14 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Evidence drive for the r15 broadcast set-guard twins: at a large gram
-  * set, the EMBEDDED kernel re-serializes the whole set into every
-  * stage's (and every micro-batch's) task binary, while the broadcast
-  * twin ships a handle and pays the set transfer once. Measures
+/** Evidence drive for the two arms of a set-guard [[graft.functions.Payload]]:
+  * at a large gram set, the EMBEDDED arm re-serializes the whole set into
+  * every stage's (and every micro-batch's) task binary, while the
+  * broadcast arm ships a handle and pays the set transfer once. Measures
   * (a) the serialized EXPRESSION payload both ways — what actually rides
   * the task binary per stage — and (b) per-batch wall over K successive
   * filter actions (the foreachBatch/micro-batch shape), embedded vs
-  * auto-broadcast, with verdict-identity checked. Appends one line to
+  * broadcast, with verdict-identity checked. Appends one line to
   * `bench_ops_scale.json`. */
 object DriveBcGuard {
   def main(args: Array[String]): Unit = {
@@ -36,9 +36,9 @@ object DriveBcGuard {
     // (a) Serialized expression payload — the per-stage task-binary rider.
     val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
     val kernels = graft.functions.SetKernels
-    val embCol = kernels.anyInSet(col("arr"), grams)
-    val bc = kernels.broadcastSet(spark, grams)
-    val bcCol = kernels.anyInSetBc(col("arr"), bc)
+    val set = kernels.LongSortedSet.of(grams)
+    val embCol = kernels.anyInSet(col("arr"), graft.functions.Payload.Embedded(set))
+    val bcCol = kernels.anyInSet(col("arr"), graft.functions.Payload.broadcast(set))
     def exprBytes(c: org.apache.spark.sql.Column): Long =
       ser.serialize(org.apache.spark.sql.graftshim.GraftSql.expression(c)).limit().toLong
     val embBytes = exprBytes(embCol)

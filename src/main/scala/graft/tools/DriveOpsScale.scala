@@ -128,7 +128,8 @@ object DriveOpsScale {
       val toks = split(trim(lower(col("text"))), "\\s+")
       val sh = graft.functions.ShingleSketch.sketch(toks, 13, 0).getField("sh")
       df.where(!coalesce(
-        graft.functions.SetKernels.anyInBloom(sh, evalGrams, 20), lit(false)))
+        graft.functions.SetKernels.anyInBloom(sh, graft.functions.Payload(
+          graft.functions.SetKernels.LongBloomSet.build(evalGrams, 20))), lit(false)))
     })
 
     // PQ encode: codebook trained once on a 2000-row sample (training cost

@@ -26,7 +26,8 @@ object DriveProfileQ {
       case a if a.startsWith("--suffix=") => a.stripPrefix("--suffix=")
     }.getOrElse("")
     // --conf k=v (repeatable): extra session config for A/B runs (e.g. the
-    // streaming state-store provider); overrides the tuning defaults.
+    // streaming state-store provider); applied last, so it overrides every
+    // built-in config below.
     val extraConf = args.collect {
       case a if a.startsWith("--conf ") || a.startsWith("--conf=") =>
         a.stripPrefix("--conf=").stripPrefix("--conf ").split("=", 2) match {
@@ -48,11 +49,12 @@ object DriveProfileQ {
       .config("spark.sql.maxPlanStringLength",
         sys.props.getOrElse("graft.planLen", "8192"))
       .config("spark.sql.shuffle.partitions", cpus)
-    val spark = extraConf.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .appName("graft-profile").getOrCreate()
+      .appName("graft-profile")
+    val spark = extraConf.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // Job/stage/task accounting: attributes a query's wall to scheduling

@@ -210,7 +210,8 @@ class Round10OpsSpec extends AnyFunSuite {
       (4L, Seq[java.lang.Long]())                             // empty: false
     ).toDF("id", "arr")
     val probed = df.select(col("id"),
-      SetKernels.anyInBloom(col("arr"), members, 20).as("hit"))
+      SetKernels.anyInBloom(col("arr"), graft.functions.Payload(
+        SetKernels.LongBloomSet.build(members, 20))).as("hit"))
       .orderBy("id").collect()
     assert(probed(0).getBoolean(1) === true)
     assert(probed(1).getBoolean(1) === true)

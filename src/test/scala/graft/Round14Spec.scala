@@ -301,40 +301,6 @@ class Round14Spec extends AnyFunSuite {
     }
   }
 
-  // ------------------------------------------- broadcast MIH probes
-
-  test("broadcast MIH probes == embedded-index probes, row for row") {
-    import graft.functions.HammingIndexKernel
-    val hashes = (0L until 500L).map(i => i * 0x9E3779B97F4A7C15L ^ (i << 23))
-    val idx = new HammingIndexKernel.MihIndex(hashes.toArray, 4,
-      hashes.indices.map(_.toLong).toArray)
-    val bc = spark.sparkContext.broadcast(idx)
-    // Probe set: every corpus hash, near-misses at d=2, and far points.
-    val probes = hashes ++ hashes.map(_ ^ 0x0000010000000100L) ++
-      hashes.map(~_)
-    val df = probes.zipWithIndex
-      .map { case (h, i) => (i.toLong, h) }.toDF("pid", "h")
-    val both = df.select(col("pid"),
-        HammingIndexKernel.anyWithin(col("h"), idx, 2).as("a_emb"),
-        HammingIndexKernel.anyWithin(col("h"), bc, 2).as("a_bc"),
-        HammingIndexKernel.minIdWithin(col("h"), idx, 2).as("m_emb"),
-        HammingIndexKernel.minIdWithin(col("h"), bc, 2).as("m_bc"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getBoolean(1) === r.getBoolean(2), s"anyWithin @ ${r.getLong(0)}")
-      assert(r.getLong(3) === r.getLong(4), s"minIdWithin @ ${r.getLong(0)}")
-    }
-    // The broadcast variant's task-binary payload is the HANDLE, not the
-    // index: the expression tree must not reference the MihIndex object.
-    val bcCol = HammingIndexKernel.minIdWithin(col("h"), bc, 2)
-    val expr = org.apache.spark.sql.graftshim.GraftSql.expression(bcCol)
-    assert(!expr.asInstanceOf[Product].productIterator
-      .exists(_.isInstanceOf[HammingIndexKernel.MihIndex]))
-    assert(expr.asInstanceOf[Product].productIterator
-      .exists(_.isInstanceOf[org.apache.spark.broadcast.Broadcast[_]]))
-    bc.unpersist(blocking = false)
-  }
-
   // --------------------------------------------------- video fingerprint
 
   test("videoHashOne: remux-invariant, splice <= 4 bits, distinct families, null on garbage") {

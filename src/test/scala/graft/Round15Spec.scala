@@ -3,92 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-15 additions: broadcast twins for the fused set guards, the
-  * interleaved pipeline's text-dedup chain + numeric-id contract, and the
-  * video-fingerprint allocation caps. */
+/** Round-15 additions: the interleaved pipeline's text-dedup chain +
+  * numeric-id contract, and the video-fingerprint allocation caps. */
 class Round15Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  // ------------------------------------------- set-guard broadcast twins
-
-  test("SetKernels broadcast twins: probe-identical to the embedded forms, handle-only tree") {
-    import graft.functions.SetKernels
-    val members = Array(3L, 17L, 99L, -5L, 1234567L)
-    val df = spark.range(0, 2000).toDF("id")
-      .withColumn("arr", array(
-        pmod(xxhash64(col("id")), lit(200)).cast("long"),
-        col("id") % 7,
-        when(col("id") % 13 === 0, lit(null).cast("long")).otherwise(lit(98L))))
-    val bc = SetKernels.broadcastSet(spark, members)
-    try {
-      val both = df.select(
-        SetKernels.anyInSet(col("arr"), members).as("any_e"),
-        SetKernels.anyInSetBc(col("arr"), bc).as("any_b"),
-        SetKernels.countInSet(col("arr"), members).as("cnt_e"),
-        SetKernels.countInSetBc(col("arr"), bc).as("cnt_b")).collect()
-      both.foreach { r =>
-        assert(r.isNullAt(0) == r.isNullAt(1) &&
-          (r.isNullAt(0) || r.getBoolean(0) == r.getBoolean(1)), s"anyInSet: $r")
-        assert(r.isNullAt(2) == r.isNullAt(3) &&
-          (r.isNullAt(2) || r.getLong(2) == r.getLong(3)), s"countInSet: $r")
-      }
-      // Sanity on content: the set must actually hit sometimes.
-      assert(both.exists(r => !r.isNullAt(0) && r.getBoolean(0)))
-      assert(both.exists(r => !r.isNullAt(0) && !r.getBoolean(0)))
-      // The Bc expression tree carries ONLY the broadcast handle — the
-      // point of the twin: no LongSortedSet rides the task binary.
-      val expr = org.apache.spark.sql.graftshim.GraftSql.expression(
-        SetKernels.anyInSetBc(col("arr"), bc))
-      assert(!expr.asInstanceOf[Product].productIterator
-        .exists(_.isInstanceOf[SetKernels.LongSortedSet]))
-      assert(expr.asInstanceOf[Product].productIterator
-        .exists(_.isInstanceOf[org.apache.spark.broadcast.Broadcast[_]]))
-    } finally bc.unpersist(blocking = false)
-  }
-
-  test("SetKernels stripLinesInBc + anyInBloomBc: identical to the embedded forms") {
-    import graft.functions.SetKernels
-    val texts = Seq("keep a\ndrop me\nkeep b", "drop me", "all kept\nlines here",
-      null, "", "drop me\ndrop me")
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val lineHashes = Seq("drop me").toDF("l")
-      .select(xxhash64(col("l"))).collect().map(_.getLong(0))
-    val bcStrip = SetKernels.broadcastSet(spark, lineHashes)
-    val bloom = SetKernels.LongBloomSet.build(Array(3L, 17L, 99L), 20)
-    val bcBloom = spark.sparkContext.broadcast(bloom)
-    try {
-      val rows = df.withColumn("arr", array(col("id") % 5, lit(99L))).select(
-        SetKernels.stripLinesIn(col("text"), lineHashes).as("s_e"),
-        SetKernels.stripLinesInBc(col("text"), bcStrip).as("s_b"),
-        SetKernels.anyInBloomSet(col("arr"), bloom).as("bl_e"),
-        SetKernels.anyInBloomBc(col("arr"), bcBloom).as("bl_b")).collect()
-      rows.foreach { r =>
-        assert(r.isNullAt(0) == r.isNullAt(1) &&
-          (r.isNullAt(0) || r.getString(0) == r.getString(1)), s"strip: $r")
-        assert(r.getBoolean(2) == r.getBoolean(3), s"bloom: $r")
-      }
-      assert(rows.exists(r => !r.isNullAt(0) && !r.getString(0).contains("drop me")))
-    } finally {
-      bcStrip.unpersist(blocking = false)
-      bcBloom.unpersist(blocking = false)
-    }
-  }
-
-  test("SetKernels Auto builders: embed small sets, broadcast past the byte threshold") {
-    import graft.functions.SetKernels
-    def tree(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graftshim.GraftSql.expression(c)
-        .asInstanceOf[Product].productIterator.toList
-    val small = Array(1L, 2L, 3L)
-    assert(tree(SetKernels.anyInSetAuto(spark, col("a"), small))
-      .exists(_.isInstanceOf[SetKernels.LongSortedSet]))
-    // 1M longs = exactly the 8 MB threshold: must take the broadcast arm.
-    val big = Array.tabulate((SetKernels.BroadcastThresholdBytes / 8L).toInt)(_.toLong)
-    val autoBig = SetKernels.countInSetAuto(spark, col("a"), big)
-    assert(tree(autoBig).exists(_.isInstanceOf[org.apache.spark.broadcast.Broadcast[_]]))
-    assert(!tree(autoBig).exists(_.isInstanceOf[SetKernels.LongSortedSet]))
-  }
 
   // ------------------------------- interleaved pipeline: text-dedup chain
 

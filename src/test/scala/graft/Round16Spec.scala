@@ -128,18 +128,16 @@ class Round16Spec extends AnyFunSuite {
     val K = graft.functions.HammingIndexKernel
     val r2 = Array.tabulate(64)(i => (2 * i).toByte)
     val inv = graft.llm.Multimodal.profileRankInvOf(r2)
-    val idx = new K.MihIndex(Array(7L), 4, Array(1L), r2, Array(inv))
-    val bc = spark.sparkContext.broadcast(idx)
-    try {
-      intercept[IllegalArgumentException] {
-        K.idsBelowWithinRankDot(lit(7L), lit(2L), lit(Array.fill(64)(0.125)),
-          bc, 14, Double.NaN)
-      }
-      intercept[IllegalArgumentException] {
-        K.idsBelowWithinRankDot(lit(7L), lit(2L), lit(Array.fill(64)(0.125)),
-          bc, 14, Double.PositiveInfinity)
-      }
-    } finally bc.unpersist(blocking = false)
+    val idx = graft.functions.Payload(
+      new K.MihIndex(Array(7L), 4, Array(1L), r2, Array(inv)))
+    intercept[IllegalArgumentException] {
+      K.idsBelowWithinRankDot(lit(7L), lit(2L), lit(Array.fill(64)(0.125)),
+        idx, 14, Double.NaN)
+    }
+    intercept[IllegalArgumentException] {
+      K.idsBelowWithinRankDot(lit(7L), lit(2L), lit(Array.fill(64)(0.125)),
+        idx, 14, Double.PositiveInfinity)
+    }
   }
 
   // ------------------------------------- cell-partitioned fused probe

@@ -106,8 +106,8 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("SetKernels membership probes: hits, misses, null elements, codegen parity") {
-    import graft.functions.SetKernels
-    val set = Array(5L, 1L, 9L, 1L << 40)
+    import graft.functions.{Payload, SetKernels}
+    val set = Payload(SetKernels.LongSortedSet.of(Array(5L, 1L, 9L, 1L << 40)))
     val df = Seq(
       (1L, Some(Seq(2L, 3L, 9L))),     // hit (9)
       (2L, Some(Seq(2L, 3L, 4L))),     // miss
