@@ -85,7 +85,32 @@ class BareRawLocalFs extends RawLocalFileSystem {
   * metadata + state snapshots forked 2.7-4.7 s of per-file `chmod` inside
   * a ~3 s streaming query. Mirrors Hadoop's own `RawLocalFs`
   * (DelegateToFileSystem over the raw local FS) with permission
-  * application disabled; rename atomicity on the local FS is unchanged. */
+  * application disabled; rename atomicity on the local FS is unchanged.
+  *
+  * Writing no `.crc` sidecar leaves any sidecar a checksummed writer made
+  * earlier stale: a stock `LocalFs` reader would then fail the new bytes
+  * with a `ChecksumException`. So replacing a file's bytes — a create with
+  * OVERWRITE, or a rename onto it — deletes its `.<name>.crc` sibling. */
 class BareLocalAbstractFs(uri: java.net.URI, conf: Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(
-    uri, new BareRawLocalFs, conf, "file", false)
+    uri, new BareRawLocalFs, conf, "file", false) {
+
+  private def dropChecksum(f: Path): Unit =
+    fsImpl.delete(new Path(f.getParent, s".${f.getName}.crc"), false)
+
+  override def createInternal(f: Path,
+      flag: java.util.EnumSet[org.apache.hadoop.fs.CreateFlag],
+      absolutePermission: FsPermission, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable,
+      checksumOpt: org.apache.hadoop.fs.Options.ChecksumOpt,
+      createParent: Boolean): org.apache.hadoop.fs.FSDataOutputStream = {
+    if (flag.contains(org.apache.hadoop.fs.CreateFlag.OVERWRITE)) dropChecksum(f)
+    super.createInternal(f, flag, absolutePermission, bufferSize, replication,
+      blockSize, progress, checksumOpt, createParent)
+  }
+
+  override def renameInternal(src: Path, dst: Path): Unit = {
+    dropChecksum(dst)
+    super.renameInternal(src, dst)
+  }
+}

@@ -1,7 +1,14 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSql
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end C4/RefinedWeb-style curation: the pipeline a real
   * training-data job runs, composed from the library's own stages in
@@ -24,11 +31,12 @@ import org.apache.spark.sql.functions._
   * zero-shuffle kernels; the filters are stateless projections; the only
   * wide operations are the ones dedup inherently needs (content-hash
   * shuffle, banded-minhash candidate join, gram-key join). Each stage
-  * output is localCheckpoint-ed once — it is read exactly twice (its
-  * stats aggregate + the next stage), so recomputing the whole prefix
-  * chain per stage would be strictly worse; intermediate checkpoints are
-  * unpersisted as soon as the next stage materializes. Stats cost one
-  * count+token-sum aggregate per stage over that stage's output.
+  * output is localCheckpoint-ed once and read once, by the next stage —
+  * recomputing the whole prefix chain per stage would be strictly worse;
+  * intermediate checkpoints are unpersisted as soon as the next stage
+  * materializes. Stage counts cost no job of their own: they ride each
+  * checkpoint's materialize job as `observe` metrics, so they aggregate
+  * exactly the rows the checkpoint holds.
   *
   * Near-dup banding (r14): `bands = 0` (the default) derives
   * `(bands, rowsPerBand)` from [[Dedup.lshParamsSelective]] — the most
@@ -46,46 +54,36 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  // Stage checkpoints are corpus-sized and read exactly twice (stats +
-  // next stage); serialized block storage keeps them as byte chunks
-  // instead of hundreds of millions of row objects (the 100M-doc GC
-  // ceiling — BENCH_NOTES r14), at the cost of two cheap streaming
-  // deserializes.
-  private val CkptSer = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+  // Stage checkpoints are corpus-sized; serialized block storage keeps
+  // them as byte chunks instead of hundreds of millions of row objects
+  // (the 100M-doc GC ceiling — BENCH_NOTES r14), at the cost of one cheap
+  // streaming deserialize.
+  private val CkptSer = StorageLevel.MEMORY_AND_DISK_SER
 
-  /** Stats modes (r18 — VERDICT r17 #1: the per-stage count jobs were the
-    * flagship pipelines' largest overhead, ~24% of wall at 3M docs):
-    *  - `exact`: dedicated aggregate jobs over each stage's checkpoint
-    *    (the r17 behavior);
-    *  - `cheap`: the SAME values collected as `observe` metrics riding the
-    *    checkpoint's own materialize job — zero extra jobs, values
-    *    identical by construction (the metrics aggregate over exactly the
-    *    rows the checkpoint materializes);
-    *  - `off`: no counting at all — stats rows carry -1 for the count
-    *    columns (wall_sec and capped_rows stay real).
-    * `cheap` is the right default for large corpora; it is not the
-    * code-default only because r17's artifacts pinned `exact`'s shape. */
-  private val StatsModes = Set("exact", "cheap", "off")
-
-  /** Bounded wait for an observation attached to an ALREADY-MATERIALIZED
-    * frame (the eager checkpoint returned, so the execution-end event is
-    * posted; the listener normally fires within milliseconds). None after
-    * the bound — callers fall back to an exact aggregate, trading the
-    * saved job back for correctness. */
-  private def awaitObs(obs: Observation): Option[Row] = {
-    var r = org.apache.spark.sql.graftshim.GraftSql.observedRow(obs)
-    var waitedMs = 0L
-    while (r.isEmpty && waitedMs < 10000L) {
-      Thread.sleep(20L)
-      waitedMs += 20L
-      r = org.apache.spark.sql.graftshim.GraftSql.observedRow(obs)
-    }
-    if (waitedMs > 100L)
-      System.err.println(s"[pipeline-stats] observation ${obs.name} took " +
-        s"${waitedMs}ms to arrive${if (r.isEmpty) " (TIMED OUT - exact fallback)" else ""}")
-    r
+  /** Eager `localCheckpoint` of `df` at `level`, with `aggs` observed on
+    * the checkpoint's own materialize job. Returns the checkpoint and the
+    * row of `aggs` values, in order. The observation lands within
+    * milliseconds of the checkpoint returning; should it not arrive
+    * within 10 s, one aggregate over the checkpoint computes the same
+    * columns. */
+  private def ckpt(df: DataFrame, level: StorageLevel, aggs: Seq[Column])
+      : (DataFrame, Row) = {
+    val named = aggs.zipWithIndex.map { case (c, i) => c.as(s"m$i") }
+    val obs = Observation()
+    val out = df.observe(obs, named.head, named.tail: _*)
+      .localCheckpoint(true, level)
+    val row =
+      try Await.result(obs.future, 10.seconds)
+      catch {
+        case _: TimeoutException =>
+          out.agg(named.head, named.tail: _*).collect()(0)
+      }
+    (out, row)
   }
 
+  /** Frees the blocks of a checkpoint no later stage reads. */
+  private def retire(df: DataFrame): Unit =
+    GraftSql.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
 
   final case class Config(
       keepLangs: Set[String] = Set("en"),
@@ -131,12 +129,7 @@ object Pipeline {
       // twin of [[TextAnalysis.redactPii]] (masking keeps the doc;
       // density-heavy docs — dumps, directories, logs — are usually
       // better dropped than turned into placeholder soup).
-      piiMaxDensity: Option[Double] = None,
-      // Stats collection mode (r18): "exact" | "cheap" | "off" — see the
-      // [[Pipeline.StatsModes]] note. `cheap` emits IDENTICAL values with
-      // zero extra jobs (observe metrics on the checkpoint's own
-      // materialize); `off` emits -1 counts.
-      statsMode: String = "exact")
+      piiMaxDensity: Option[Double] = None)
 
   /** Curated corpus + the per-stage stats frame. */
   final case class Result(docs: DataFrame, stats: DataFrame)
@@ -146,59 +139,55 @@ object Pipeline {
       cfg: Config = Config()): Result = {
     val spark = docs.sparkSession
     require(cfg.minTokens >= 0 && cfg.budgetTokens >= 0L, s"bad config $cfg")
-    require(cfg.bands >= 0, s"bad bands ${cfg.bands} (0 = auto)")
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
-    val bands =
-      if (cfg.bands > 0) cfg.bands
-      else Dedup.lshParamsSelective(cfg.nearDupThreshold, cfg.numHashes)._1
     val stats = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double, Long)]()
     var pendingCapped = 0L // set by the near-dup stage's cap reporter
-
-    // cheap mode: the (count, token-sum) pair rides each checkpoint's own
-    // materialize job as observe metrics — same rows, same values, zero
-    // extra jobs. `curObs` is the observation attached to the CURRENT
-    // checkpoint.
-    var curObs: Observation = null
-    def ckpt(df: DataFrame): DataFrame =
-      if (cfg.statsMode == "cheap") {
-        curObs = Observation()
-        df.observe(curObs, count(lit(1)).as("n"),
-          coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L))
-            .as("tok"))
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var cur = ckpt(docs.where(col(textCol).isNotNull))
-    def exactCounts(): (Long, Long) = {
-      val r = cur.agg(count(lit(1)),
-        coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L)))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    def measure(stage: String, wallSec: Double): Unit = {
-      val (rows, toks) = cfg.statsMode match {
-        case "off" => (-1L, -1L)
-        case "cheap" => awaitObs(curObs)
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .getOrElse(exactCounts())
-        case _ => exactCounts()
-      }
-      stats += ((stats.size, stage, rows, toks, wallSec, pendingCapped))
+    val aggs = Seq(count(lit(1)),
+      coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L)))
+    def record(stage: String, wallSec: Double, r: Row): Unit = {
+      stats += ((stats.size, stage, r.getLong(0), r.getLong(1), wallSec, pendingCapped))
       pendingCapped = 0L
     }
+    val (input, inRow) = ckpt(docs.where(col(textCol).isNotNull), CkptSer, aggs)
+    record("input", 0.0, inRow)
+    var cur = input
     def step(stage: String)(f: DataFrame => DataFrame): Unit = {
       val prev = cur
       val t0 = System.nanoTime()
-      cur = ckpt(f(prev)) // eager: the stage materializes here
-      measure(stage, (System.nanoTime() - t0) / 1e9)
+      val (next, r) = ckpt(f(prev), CkptSer, aggs) // eager: the stage materializes here
+      cur = next
+      record(stage, (System.nanoTime() - t0) / 1e9, r)
       // prev's blocks free IMMEDIATELY once cur is materialized — holding
       // them to the end would stack every stage's full corpus in executor
       // storage at once (~9x the working set at the benched sizes).
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
+      retire(prev)
     }
-    measure("input", 0.0)
+    textStages(cfg, idCol, textCol, evalDocs, pendingCapped = _)(step)
+    if (cfg.budgetTokens > 0L)
+      step("token_budget")(df => Sampling.sampleTokenBudget(
+        df.withColumn("__tok", TextAnalysis.tokenCount(col(textCol)).cast("long")),
+        Seq(idCol), "__tok", cfg.budgetTokens, cfg.seed).drop("__tok"))
 
+    import spark.implicits._
+    Result(cur,
+      stats.toSeq.toDF("ord", "stage", "rows_out", "tokens_out", "wall_sec",
+        "capped_rows"))
+  }
+
+  /** The text stages [[curate]] and [[curateInterleavedMm]] share, in
+    * order: fix_encoding → html_extract → langid_filter → quality_filter →
+    * pii_filter → model_quality_filter → dsir_resample → line_dedup →
+    * exact_dedup → near_dedup → decontaminate, where pii_filter, the two
+    * model stages and decontaminate run only when `cfg` or `evalDocs` asks
+    * for them. `step(stage)(f)` runs one stage the caller's way (its own
+    * checkpoint and counts); `onCapped` receives the rows near_dedup's
+    * bucket cap dropped. */
+  private def textStages(cfg: Config, idCol: String, textCol: String,
+      evalDocs: Option[DataFrame], onCapped: Long => Unit)
+      (step: String => (DataFrame => DataFrame) => Unit): Unit = {
+    require(cfg.bands >= 0, s"bad bands ${cfg.bands} (0 = auto)")
+    val bands =
+      if (cfg.bands > 0) cfg.bands
+      else Dedup.lshParamsSelective(cfg.nearDupThreshold, cfg.numHashes)._1
     step("fix_encoding")(df => df.withColumn(textCol,
       graft.functions.NormalizeKernel.nfkc(
         graft.functions.MojibakeKernel.fixMojibake(col(textCol)))))
@@ -246,7 +235,7 @@ object Pipeline {
       Seq("__fp"), idCol).drop("__fp"))
     step("near_dedup")(df => Dedup.dropNearDupsMinHash(df, idCol, textCol,
       cfg.nearDupThreshold, cfg.numHashes, bands, cfg.shingleWidth,
-      cfg.maxBucket, onCapDrops = (_, rows) => pendingCapped = rows))
+      cfg.maxBucket, onCapDrops = (_, rows) => onCapped(rows)))
     evalDocs.foreach { ev =>
       // Auto plan: benchmark-sized eval gram sets fuse to a single
       // projection+filter pass (r14 — one corpus pass instead of the
@@ -255,15 +244,6 @@ object Pipeline {
       step("decontaminate")(df => Decontamination.decontaminateAuto(df, ev,
         idCol, textCol, cfg.decontaminateNgram))
     }
-    if (cfg.budgetTokens > 0L)
-      step("token_budget")(df => Sampling.sampleTokenBudget(
-        df.withColumn("__tok", TextAnalysis.tokenCount(col(textCol)).cast("long")),
-        Seq(idCol), "__tok", cfg.budgetTokens, cfg.seed).drop("__tok"))
-
-    import spark.implicits._
-    Result(cur,
-      stats.toSeq.toDF("ord", "stage", "rows_out", "tokens_out", "wall_sec",
-        "capped_rows"))
   }
 
   // ------------------------------------------------------ image pipeline
@@ -275,10 +255,7 @@ object Pipeline {
       targetW: Int = 64,
       targetH: Int = 64,
       resizeFormat: String = "png",
-      batchSize: Int = 64,
-      // "exact" | "cheap" | "off" (r18) — the [[Config.statsMode]] knob
-      // for the image pipeline's (rows, bytes) stats.
-      statsMode: String = "exact")
+      batchSize: Int = 64)
 
   /** The multimodal sibling of [[curate]]: image-corpus curation as one
     * entry point —
@@ -304,46 +281,25 @@ object Pipeline {
   def curateImages(docs: DataFrame, idCol: String, binCol: String,
       cfg: ImageConfig = ImageConfig()): Result = {
     val spark = docs.sparkSession
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
     val stats = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double)]()
     // bytes_out sums the stage's OWN payload column: the resize stage
     // reports the RESIZED volume (the number a storage budget watches),
     // not the source payload it still carries alongside (r14 — ADVICE).
-    // cheap mode (r18): the pair rides the checkpoint's materialize job.
-    var curObs: Observation = null
-    def ckpt(df: DataFrame, bytesCol: String): DataFrame =
-      if (cfg.statsMode == "cheap") {
-        curObs = Observation()
-        df.observe(curObs, count(lit(1)).as("n"),
-          coalesce(sum(length(col(bytesCol)).cast("long")), lit(0L)).as("bytes"))
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var cur = ckpt(docs.where(col(binCol).isNotNull), binCol)
-    def measure(stage: String, wallSec: Double, bytesCol: String): Unit = {
-      def exactCounts(): (Long, Long) = {
-        val r = cur.agg(count(lit(1)),
-          coalesce(sum(length(col(bytesCol)).cast("long")), lit(0L))).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      }
-      val (rows, bytes) = cfg.statsMode match {
-        case "off" => (-1L, -1L)
-        case "cheap" => awaitObs(curObs)
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .getOrElse(exactCounts())
-        case _ => exactCounts()
-      }
-      stats += ((stats.size, stage, rows, bytes, wallSec))
-    }
+    def aggs(bytesCol: String) = Seq(count(lit(1)),
+      coalesce(sum(length(col(bytesCol)).cast("long")), lit(0L)))
+    def record(stage: String, wallSec: Double, r: Row): Unit =
+      stats += ((stats.size, stage, r.getLong(0), r.getLong(1), wallSec))
+    val (input, inRow) = ckpt(docs.where(col(binCol).isNotNull), CkptSer, aggs(binCol))
+    record("input", 0.0, inRow)
+    var cur = input
     def step(stage: String, bytesCol: String = binCol)(f: DataFrame => DataFrame): Unit = {
       val prev = cur
       val t0 = System.nanoTime()
-      cur = ckpt(f(prev), bytesCol)
-      measure(stage, (System.nanoTime() - t0) / 1e9, bytesCol)
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
+      val (next, r) = ckpt(f(prev), CkptSer, aggs(bytesCol))
+      cur = next
+      record(stage, (System.nanoTime() - t0) / 1e9, r)
+      retire(prev)
     }
-    measure("input", 0.0, binCol)
     step("decode_phash")(df =>
       Multimodal.pHashImages(df, binCol, cfg.batchSize)
         .where(col("phash").isNotNull))
@@ -367,13 +323,6 @@ object Pipeline {
       text: Config = Config(),
       image: ImageConfig = ImageConfig(),
       maxImagesPerDoc: Int = 1000,
-      // "exact" | "cheap" | "off" (r18 — VERDICT r17 #1): the interleaved
-      // curator's own stats knob (the nested text/image configs' statsMode
-      // fields are NOT consulted here — this pipeline runs its own stage
-      // chain). `cheap` folds every per-stage (docs, media-slots) count
-      // into the stage checkpoints' materialize jobs as observe metrics —
-      // identical values, zero extra jobs.
-      statsMode: String = "exact",
       // Storage level for the PAYLOAD-bearing side frames (r18 — VERDICT
       // r17 #2): the media side-checkpoint and the per-modality exploded
       // frames, each written once and read once or twice. The default
@@ -382,8 +331,7 @@ object Pipeline {
       // pushing vid_decode superlinear), DISK_ONLY moves them off the
       // memory budget entirely — payload blocks are streamed through
       // once, so the memory tier buys little.
-      payloadLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      payloadLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Interleaved multimodal curation (r14, text-dedup parity r15) — the
     * LAION/OBELICS-style document shape: each row carries text AND an
@@ -468,8 +416,11 @@ object Pipeline {
     * shared keep-lowest-id rule (earliest slot of the earliest document
     * wins corpus-wide), one localCheckpoint per stage, per-stage stats.
     *
-    * Text chain first ([[curate]]'s stages — a document dropped by any
-    * text stage takes ALL its media slots along), then per modality:
+    * Text chain first — the same stage function [[curate]] runs, over
+    * `cfg.text`, so a set `qualityModel` or `dsirTarget` adds its stage
+    * here too (earlier versions ignored both); `budgetTokens` alone is
+    * [[curate]]-only. A document dropped by any text stage takes ALL its
+    * media slots along. Then per modality:
     * explode → sketch (undecodable payloads dropped: image = real
     * decode + pHash; audio = spectral-band hash; video = payload
     * fingerprint — the audio/video sketches run as the streaming-safe
@@ -507,14 +458,6 @@ object Pipeline {
       s"modalities must be image/audio/video, got ${mediaCols.map(_._1).mkString(", ")}")
     require(mediaCols.map(_._1).distinct.size == mediaCols.size,
       s"duplicate modality in ${mediaCols.map(_._1).mkString(", ")}")
-    require(tc.bands >= 0, s"bad bands ${tc.bands} (0 = auto)")
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
-    val statsOn = cfg.statsMode != "off"
-    val cheap = cfg.statsMode == "cheap"
-    val bands =
-      if (tc.bands > 0) tc.bands
-      else Dedup.lshParamsSelective(tc.nearDupThreshold, tc.numHashes)._1
     var pendingCapped = 0L
 
     // PAYLOAD/TEXT SPLIT (r17, tightened r18): the text chain checkpoints
@@ -572,139 +515,46 @@ object Pipeline {
     val mediaSide = input
       .select(col(idCol).cast("long").as("__doc") +:
         mediaCols.map { case (_, mcol) => col(mcol) }: _*)
-    // cheap mode: each curDocs checkpoint carries an observation with
-    // (docs count, per-modality slot sums) — the exact values nDocs() /
-    // pendingCounts() would otherwise run dedicated jobs for. Row layout:
-    // index 0 = docs, 1 + i = slot sum of mediaCols(i).
-    var docsObs: Observation = null
-    def ckptDocs(df: DataFrame): DataFrame =
-      if (cheap) {
-        docsObs = Observation()
-        df.observe(docsObs, count(lit(1)).as("n"),
-          mediaCols.map { case (mod, _) =>
-            coalesce(sum(col(s"__n_$mod").cast("long")), lit(0L)).as(s"s_$mod")
-          }: _*)
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var curDocs = ckptDocs(input
+    // The text frame's counts, observed on each of its checkpoints:
+    // index 0 = docs, 1 + i = live slot sum of mediaCols(i).
+    val docsAggs = count(lit(1)) +: mediaCols.map { case (mod, _) =>
+      coalesce(sum(col(s"__n_$mod").cast("long")), lit(0L)) }
+    var (curDocs, docsRow) = ckpt(input
       .select(docs.columns.filterNot(mediaNames).map(col).toSeq ++
         mediaCols.map { case (mod, mcol) =>
-          coalesce(size(col(mcol)), lit(0)).as(s"__n_$mod") }: _*))
+          coalesce(size(col(mcol)), lit(0)).as(s"__n_$mod") }: _*),
+      CkptSer, docsAggs)
     // input stays persisted: the per-modality explodes read their payload
     // bytes from it (retired after the last explode).
     // modality -> exploded (doc, idx, payload) frame, once text settles
     val frames = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
-    // Count memoization (r17): the stats contract reports (docs, media)
-    // after EVERY stage, but a frame only changes at its own stages —
-    // curDocs is frozen through all media stages, and a settled
-    // modality's frame is frozen through every other modality's. The
-    // caches hold those counts; the step functions invalidate exactly
-    // what they changed (same values, ~2 count jobs per stage fewer).
-    var docsCount: Long = -1L
-    val frameCount = scala.collection.mutable.HashMap.empty[String, Long]
-    // cheap mode: per-modality frame observations (count; the explode
-    // checkpoint's also carries max slot index for the maxImagesPerDoc
-    // contract check).
-    val frameObs = scala.collection.mutable.HashMap.empty[String, Observation]
-    def nDocs(): Long = {
-      if (docsCount < 0L)
-        docsCount =
-          if (cheap) awaitObs(docsObs).map(_.getLong(0)).getOrElse(curDocs.count())
-          else curDocs.count()
-      docsCount
-    }
-    // Pending-modality slot counts are cached and refreshed in ONE agg
-    // over curDocs, invalidated only when curDocs changes (r16 review:
-    // recomputing them per MEDIA stage re-scanned the full corpus blocks
-    // — payload bytes included — for values that cannot have changed;
-    // r17: the slim frame's count columns make the agg payload-free).
-    var pendingCache: Map[String, Long] = null
-    def pendingCounts(): Map[String, Long] = {
-      if (pendingCache == null) {
-        val pending = mediaCols.filter { case (mod, _) => !frames.contains(mod) }
-        def exactPending(): Map[String, Long] =
-          if (pending.isEmpty) Map.empty
-          else {
-            val aggs = pending.map { case (mod, _) =>
-              coalesce(sum(col(s"__n_$mod").cast("long")), lit(0L))
-            }
-            val r = curDocs.agg(aggs.head, aggs.tail: _*).collect()(0)
-            pending.zipWithIndex.map { case ((mod, _), i) => mod -> r.getLong(i) }.toMap
-          }
-        pendingCache =
-          if (pending.isEmpty) Map.empty
-          else if (cheap)
-            // Row layout pinned by ckptDocs: 1 + position in mediaCols.
-            awaitObs(docsObs).map { r =>
-              val at = mediaCols.map(_._1).zipWithIndex.toMap
-              pending.map { case (mod, _) => mod -> r.getLong(1 + at(mod)) }.toMap
-            }.getOrElse(exactPending())
-          else exactPending()
-      }
-      pendingCache
-    }
-    def nMedia(): Long = mediaCols.map { case (mod, _) =>
-      frames.get(mod) match {
-        case Some(f) => frameCount.getOrElseUpdate(mod,
-          (if (cheap) frameObs.get(mod).flatMap(o => awaitObs(o)).map(_.getLong(0))
-           else None).getOrElse(f.count()))
-        case None => pendingCounts()(mod)
-      }
+    // modality -> row count last observed on its frame. A frame only
+    // changes at its own stages, so the stats row after EVERY stage reads
+    // these and the text frame's last row; a modality not yet exploded
+    // counts its slot sum on the text frame.
+    val frameRows = scala.collection.mutable.HashMap.empty[String, Long]
+    def nMedia(): Long = mediaCols.zipWithIndex.map { case ((mod, _), i) =>
+      frameRows.getOrElse(mod, docsRow.getLong(1 + i))
     }.sum
-    def measure(stage: String, wallSec: Double): Unit = {
-      if (statsOn)
-        stats += ((stats.size, stage, nDocs(), nMedia(), wallSec, pendingCapped))
-      else
-        stats += ((stats.size, stage, -1L, -1L, wallSec, pendingCapped))
+    def record(stage: String, wallSec: Double): Unit = {
+      stats += ((stats.size, stage, docsRow.getLong(0), nMedia(), wallSec, pendingCapped))
       pendingCapped = 0L
     }
-    def retire(prev: DataFrame): Unit =
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
     def stepDocs(stage: String)(f: DataFrame => DataFrame): Unit = {
       val prev = curDocs
       val t0 = System.nanoTime()
-      curDocs = ckptDocs(f(prev))
-      pendingCache = null // docs changed: pending slot sums are stale
-      docsCount = -1L
-      measure(stage, (System.nanoTime() - t0) / 1e9)
+      val (next, r) = ckpt(f(prev), CkptSer, docsAggs)
+      curDocs = next
+      docsRow = r
+      record(stage, (System.nanoTime() - t0) / 1e9)
       retire(prev)
     }
-    measure("input", 0.0)
+    record("input", 0.0)
 
-    // Text stages — the [[curate]] chain's filter prefix; a document that
-    // dies here takes its media slots with it (visible in images_out).
-    stepDocs("fix_encoding")(df => df.withColumn(textCol,
-      graft.functions.NormalizeKernel.nfkc(
-        graft.functions.MojibakeKernel.fixMojibake(col(textCol)))))
-    stepDocs("html_extract")(df => df
-      .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    stepDocs("langid_filter")(df => df.where(
-      TextAnalysis.languageId(col(textCol)).isin(tc.keepLangs.toSeq: _*)))
-    stepDocs("quality_filter")(df => df.where(
-      TextAnalysis.qualityScore(col(textCol)) >= tc.minQuality &&
-        TextAnalysis.tokenCount(col(textCol)) >= tc.minTokens))
-    tc.piiMaxDensity.foreach { maxD =>
-      stepDocs("pii_filter")(df => df.where(
-        TextAnalysis.piiStats(col(textCol)).getField("density") <= maxD))
-    }
-    // Text dedup chain (r15) — [[curate]]'s stages verbatim; a duplicated
-    // interleaved document dies HERE and its media slots die with it
-    // (slot survival shows in images_out, the replay contract).
-    stepDocs("line_dedup")(df => df
-      .withColumn(textCol, TextAnalysis.removeRepeatedLines(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    stepDocs("exact_dedup")(df => Dedup.exactKeepFirst(
-      df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-      Seq("__fp"), idCol).drop("__fp"))
-    stepDocs("near_dedup")(df => Dedup.dropNearDupsMinHash(df, idCol, textCol,
-      tc.nearDupThreshold, tc.numHashes, bands, tc.shingleWidth,
-      tc.maxBucket, onCapDrops = (_, rows) => pendingCapped = rows))
-    evalDocs.foreach { ev =>
-      stepDocs("decontaminate")(df => Decontamination.decontaminateAuto(df, ev,
-        idCol, textCol, tc.decontaminateNgram))
-    }
+    // Text stages — [[curate]]'s chain; a document that dies here
+    // (duplicated text included) takes its media slots with it (visible in
+    // images_out, the replay contract).
+    textStages(tc, idCol, textCol, evalDocs, pendingCapped = _)(stepDocs)
 
     // Media stages per modality, over that modality's exploded frame;
     // `__mid` linearizes (doc, slot) so the shared keep-lowest-id rule
@@ -717,52 +567,36 @@ object Pipeline {
         case _ => "vid"
       }
       val t0x = System.nanoTime()
-      // Frame checkpoints (payload-bearing) sit at cfg.payloadLevel; in
-      // cheap mode each carries a count observation, and the EXPLODE
-      // checkpoint additionally the max slot index (the maxImagesPerDoc
-      // contract check — observed in off mode too, so the contract holds
-      // without a dedicated job in every mode).
-      var explodeObs: Observation = null
-      def ckptFrame(df: DataFrame, isExplode: Boolean): DataFrame =
-        if (cheap || (isExplode && !statsOn)) {
-          val o = Observation()
-          frameObs(mod) = o
-          if (isExplode) explodeObs = o
-          val base = df.observe(o, count(lit(1)).as("n"),
-            (if (isExplode) Seq(coalesce(max(col("__idx")), lit(0)).as("mx"))
-             else Nil): _*)
-          base.localCheckpoint(true, cfg.payloadLevel)
-        } else df.localCheckpoint(true, cfg.payloadLevel)
       // Surviving docs' payloads from the side frame: one left-semi join
       // on the curated ids (the only place this modality's bytes move),
       // then explode to slots. AQE picks the join strategy; the payload
-      // side never re-shuffles after this.
-      frames(mod) = ckptFrame(mediaSide
+      // side never re-shuffles after this. Frame checkpoints
+      // (payload-bearing) sit at cfg.payloadLevel; the explode's also
+      // observes the max slot index (the maxImagesPerDoc contract check).
+      val (exploded, exRow) = ckpt(mediaSide
         .join(curDocs.select(col(idCol).cast("long").as("__doc")),
           Seq("__doc"), "left_semi")
         .select(col("__doc"),
           posexplode(coalesce(col(mcol),
             array().cast(docs.schema(mcol).dataType))).as(Seq("__idx", "__media"))),
-        isExplode = true)
+        cfg.payloadLevel, Seq(count(lit(1)), coalesce(max(col("__idx")), lit(0))))
+      frames(mod) = exploded
+      frameRows(mod) = exRow.getLong(0)
       // The LAST modality's explode was the input checkpoint's final
       // reader — its payload blocks retire here (r18: explodes read input
       // directly; holding it longer would stack it against the frames).
       if (mod == mediaCols.last._1) retire(input)
-      measure(s"${p}_explode", (System.nanoTime() - t0x) / 1e9)
-      def exactOver(): Int = frames(mod).agg(coalesce(max("__idx"), lit(0)))
-        .collect()(0).getInt(0)
-      val over =
-        if (explodeObs != null)
-          awaitObs(explodeObs).map(_.getInt(1)).getOrElse(exactOver())
-        else exactOver()
+      record(s"${p}_explode", (System.nanoTime() - t0x) / 1e9)
+      val over = exRow.getInt(1)
       require(over < cfg.maxImagesPerDoc,
         s"a document carries ${over + 1} $mod slots >= maxImagesPerDoc=${cfg.maxImagesPerDoc} — raise the knob")
       def stepMedia(stage: String)(f: DataFrame => DataFrame): Unit = {
         val prev = frames(mod)
         val t0 = System.nanoTime()
-        frames(mod) = ckptFrame(f(prev), isExplode = false)
-        frameCount.remove(mod) // only THIS modality's count went stale
-        measure(stage, (System.nanoTime() - t0) / 1e9)
+        val (next, r) = ckpt(f(prev), cfg.payloadLevel, Seq(count(lit(1))))
+        frames(mod) = next
+        frameRows(mod) = r.getLong(0)
+        record(stage, (System.nanoTime() - t0) / 1e9)
         retire(prev)
       }
       def withMid(df: DataFrame): DataFrame = df.withColumn("__mid",
@@ -844,32 +678,20 @@ object Pipeline {
     // positional consumers saw a reordered schema. Select back to the
     // input's column order with the n_<mod>s counters appended — the
     // exact r16 contract.
-    val outObs = if (cheap) Observation() else null
-    val outPre = assembled
-      .select((docs.columns.map(col) ++
-        mediaCols.map { case (mod, _) => col(s"n_${mod}s") }).toSeq: _*)
     val slotSum = coalesce(sum(
       mediaCols.map { case (mod, _) => col(s"n_${mod}s").cast("long") }
         .reduce(_ + _)), lit(0L))
-    val out = (if (cheap)
-        outPre.observe(outObs, count(lit(1)).as("n"), slotSum.as("slots"))
-      else outPre)
-      .localCheckpoint(true, CkptSer)
+    val (out, outRow) = ckpt(assembled
+      .select((docs.columns.map(col) ++
+        mediaCols.map { case (mod, _) => col(s"n_${mod}s") }).toSeq: _*),
+      CkptSer, Seq(count(lit(1)), slotSum))
     // out is materialized (eager checkpoint): the final text- and
     // media-stage blocks retire like every earlier stage's — without this
     // each interleaved run would pin corpus-sized block sets for the
     // session's lifetime (only `out` is handed to the caller).
     retire(curDocs)
     mediaCols.foreach { case (mod, _) => retire(frames(mod)) }
-    def exactOut(): (Long, Long) = (out.count(),
-      out.agg(slotSum).collect()(0).getLong(0))
-    val (outDocs, outSlots) = cfg.statsMode match {
-      case "off" => (-1L, -1L)
-      case "cheap" => awaitObs(outObs)
-        .map(r => (r.getLong(0), r.getLong(1))).getOrElse(exactOut())
-      case _ => exactOut()
-    }
-    stats += ((stats.size, "reassemble", outDocs, outSlots,
+    stats += ((stats.size, "reassemble", outRow.getLong(0), outRow.getLong(1),
       (System.nanoTime() - t0r) / 1e9, 0L))
 
     import spark.implicits._

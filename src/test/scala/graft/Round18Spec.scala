@@ -3,203 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-18 additions: pipeline stats modes (exact/cheap/off — cheap
-  * rides observe metrics on the stage checkpoints' own materialize jobs),
-  * the payload storage-level lever, the flat-index hatch on the streaming
-  * profile guard, the id-contract check moved onto the checkpointed input,
-  * videoProfileIndex's loud numeric-id guard, and the WriterLock
-  * rename-back hardening. */
+/** Round-18 additions: the flat-index hatch on the streaming profile
+  * guard, the id-contract check moved onto the checkpointed input,
+  * videoProfileIndex's loud numeric-id guard, the pipeline's PII density
+  * gate, and the WriterLock rename-back hardening. (The pipeline stats
+  * and payload-level tests live in PipelineStatsSpec.) */
 class Round18Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  // ---------------------------------------------- shared plant helpers
-
-  private def chunksFor(nf: Int): Seq[Int] =
-    Seq.fill(nf / 64)(64) ++ (if (nf % 64 > 0) Seq(nf % 64) else Nil)
-
-  private def vid(fam: Long, payloadFam: Long, reenc: Boolean): Array[Byte] = {
-    val M = graft.llm.Multimodal
-    val sizes =
-      if (reenc) M.bitrateProfileFrameSizes(fam, 640, 0.6, gop = 8, noiseSeed = 2L)
-      else M.bitrateProfileFrameSizes(fam, 640, 1.0, gop = 12, noiseSeed = 1L)
-    M.encodeMp4Media(payloadFam, sizes, chunksFor(640))
-  }
-
-  private def vidRemux(fam: Long): Array[Byte] = {
-    val M = graft.llm.Multimodal
-    M.encodeMp4Media(fam * 100L,
-      M.bitrateProfileFrameSizes(fam, 640, 1.0, gop = 12, noiseSeed = 1L),
-      Seq.fill(20)(32), timescale = 90000, durationUnits = 640L * 20L * 150L)
-  }
-
-  /** 24-doc interleaved plant, one media slot per doc across all three
-    * modalities, with a planted drop for every media stage (garbage /
-    * byte-copy / near-copy / video re-encode). */
-  private lazy val mmPlant = {
-    val M = graft.llm.Multimodal
-    val rows = (0L until 24L).map { id =>
-      val img: Seq[Array[Byte]] =
-        if (id % 3 != 0) Nil
-        else if (id == 6L) Seq(M.encodeBlockImage(0L))
-        else if (id == 9L) Seq(M.resizeOne(M.encodeBlockImage(3L), 48, 48, "png"))
-        else if (id == 12L) Seq(s"junk-img-$id".getBytes("UTF-8"))
-        else Seq(M.encodeBlockImage(id))
-      val aud: Seq[Array[Byte]] =
-        if (id % 3 != 1) Nil
-        else if (id == 7L) Seq(M.encodeToneWav(1L, toneFrames = 2048))
-        else if (id == 10L) Seq(M.encodeToneWav(4L, scaleShift = 1, toneFrames = 2048))
-        else if (id == 13L) Seq(s"junk-aud-$id".getBytes("UTF-8"))
-        else Seq(M.encodeToneWav(id, toneFrames = 2048))
-      val vd: Seq[Array[Byte]] =
-        if (id % 3 != 2) Nil
-        else if (id == 8L) Seq(vid(2L, 200L, reenc = false)) // byte copy of id 2
-        else if (id == 11L) Seq(vidRemux(5L)) // re-mux of id 5
-        else if (id == 14L) Seq(vid(2L, 1400L, reenc = true)) // re-encode of id 2
-        else if (id == 17L) Seq(s"junk-vid-$id".getBytes("UTF-8"))
-        else Seq(vid(id, id * 100L, reenc = false))
-      (id, img, aud, vd)
-    }
-    val base = rows.toDF("doc_id", "images", "audios", "videos")
-    val fam = col("doc_id").cast("string")
-    base.withColumn("text", concat(lit("w"), fam,
-      lit("a the quick brown fox jumps over the lazy dog w"), fam,
-      lit("b it was good that it is here and now w"), fam, lit("c")))
-  }
-
-  private def runMm(statsMode: String,
-      payloadLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) = {
-    val P = graft.llm.Pipeline
-    P.curateInterleavedMm(mmPlant, "doc_id", "text",
-      Seq("image" -> "images", "audio" -> "audios", "video" -> "videos"),
-      P.InterleavedConfig(image = P.ImageConfig(maxDistance = 2),
-        statsMode = statsMode, payloadLevel = payloadLevel),
-      audioCfg = P.MediaConfig(maxDistance = 0, pieces = 4),
-      videoCfg = P.MediaConfig(maxDistance = 4, pieces = 8, profilePairs = true))
-  }
-
-  private def statsRows(r: graft.llm.Pipeline.Result): Seq[(Int, String, Long, Long, Long)] =
-    r.stats.orderBy("ord").collect()
-      .map(x => (x.getInt(0), x.getString(1), x.getLong(2), x.getLong(3), x.getLong(5)))
-      .toSeq
-
-  private def survivors(r: graft.llm.Pipeline.Result): Set[(Long, Seq[Seq[Byte]])] =
-    r.docs.select(col("doc_id"),
-        concat(col("images"), col("audios"), col("videos")).as("m"))
-      .collect()
-      .map(x => (x.getLong(0), x.getSeq[Array[Byte]](1).map(_.toSeq)))
-      .toSet
-
-  // ----------------------------------- stats modes: cheap ≡ exact ≡ off
-
-  test("curateInterleavedMm: cheap stats ≡ exact stats (values identical, zero extra jobs), off emits -1 counts; survivors identical in all modes") {
-    val exact = runMm("exact")
-    val cheap = runMm("cheap")
-    val off = runMm("off")
-    val se = statsRows(exact)
-    val sc = statsRows(cheap)
-    val so = statsRows(off)
-    assert(se == sc, s"cheap stats must be value-identical to exact:\n$se\n$sc")
-    // Sanity on the exact side: 24 docs and 24 slots in, every planted
-    // class drops exactly one slot at its own stage.
-    val byStage = se.map(x => x._2 -> (x._3, x._4)).toMap
-    assert(byStage("input") == ((24L, 24L)))
-    assert(byStage("img_decode")._2 == byStage("img_explode")._2 - 1)
-    assert(byStage("img_exact_dedup")._2 == byStage("img_decode")._2 - 1)
-    assert(byStage("img_near_dedup")._2 == byStage("img_exact_dedup")._2 - 1)
-    assert(byStage("aud_decode")._2 == byStage("img_resize")._2 - 1)
-    assert(byStage("aud_exact_dedup")._2 == byStage("aud_decode")._2 - 1)
-    assert(byStage("aud_near_dedup")._2 == byStage("aud_exact_dedup")._2 - 1)
-    assert(byStage("vid_decode")._2 == byStage("aud_near_dedup")._2 - 1)
-    assert(byStage("vid_exact_dedup")._2 == byStage("vid_decode")._2 - 1)
-    assert(byStage("vid_near_dedup")._2 == byStage("vid_exact_dedup")._2 - 1)
-    assert(byStage("vid_profile_dedup")._2 == byStage("vid_near_dedup")._2 - 1)
-    // 24 slots minus the ten planted losers (img: garbage + byte copy +
-    // resize copy; aud: garbage + byte copy + rescale; vid: garbage +
-    // byte copy + re-mux + re-encode).
-    assert(byStage("reassemble") == ((24L, 14L)))
-    // off: same stages in the same order, counts -1, capped still real.
-    assert(so.map(_._2) == se.map(_._2))
-    assert(so.forall(x => x._3 == -1L && x._4 == -1L))
-    assert(so.map(_._5) == se.map(_._5))
-    val want = survivors(exact)
-    assert(survivors(cheap) == want, "cheap mode changed the curated output")
-    assert(survivors(off) == want, "off mode changed the curated output")
-  }
-
-  test("curateInterleavedMm: DISK_ONLY payload level is result-identical (stats and survivors)") {
-    val exact = runMm("exact")
-    val disk = runMm("cheap",
-      payloadLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    assert(statsRows(disk) == statsRows(exact))
-    assert(survivors(disk) == survivors(exact))
-  }
-
-  test("curate: cheap stats ≡ exact stats including token sums; off emits -1; curated docs identical") {
-    val P = graft.llm.Pipeline
-    // 38 docs on the proven 3-marker template (near-dup-safe between
-    // distinct ids): one exact dupe, one +1-token near dupe, one doc
-    // decontaminated against the eval set, and a token budget that trims
-    // the tail.
-    def enGood(i: Long) =
-      s"w${i}a the quick brown fox jumps over the lazy dog w${i}b " +
-        s"it was good that it is here and now w${i}c"
-    val body = (i: Long) =>
-      if (i == 36) enGood(0) // exact duplicate of doc 0
-      else if (i == 37) enGood(1) + " extra" // near-dup of doc 1
-      else enGood(i)
-    val docs = (0L until 38L).map(i => (i, body(i))).toDF("id", "text")
-    val ev = Seq((100L, enGood(3))).toDF("id", "text")
-    def run(mode: String) = P.curate(docs, "id", "text", evalDocs = Some(ev),
-      cfg = P.Config(budgetTokens = 300L, statsMode = mode))
-    val exact = run("exact")
-    val cheap = run("cheap")
-    val off = run("off")
-    def rows(r: graft.llm.Pipeline.Result) = r.stats.orderBy("ord").collect()
-      .map(x => (x.getInt(0), x.getString(1), x.getLong(2), x.getLong(3), x.getLong(5)))
-      .toSeq
-    val se = rows(exact)
-    assert(se == rows(cheap), s"curate cheap≠exact:\n$se\n${rows(cheap)}")
-    val so = rows(off)
-    assert(so.map(_._2) == se.map(_._2))
-    assert(so.forall(x => x._3 == -1L && x._4 == -1L))
-    def ids(r: graft.llm.Pipeline.Result) =
-      r.docs.select("id").collect().map(_.getLong(0)).toSet
-    assert(ids(cheap) == ids(exact) && ids(off) == ids(exact))
-    // The stages that must have dropped rows did (the plant is live).
-    val m = se.map(x => x._2 -> x._3).toMap
-    assert(m("exact_dedup") == m("line_dedup") - 1, m.toString)
-    assert(m("near_dedup") == m("exact_dedup") - 1, m.toString)
-    assert(m("decontaminate") == m("near_dedup") - 1, m.toString)
-    assert(m("token_budget") < m("decontaminate"), m.toString)
-    // Token sums are real numbers, not zeros (the cheap leg must have
-    // aggregated the same token expression).
-    assert(se.forall(x => x._4 > 0))
-  }
-
-  test("curateImages: cheap stats ≡ exact stats (rows and bytes)") {
-    val M = graft.llm.Multimodal
-    val P = graft.llm.Pipeline
-    val imgs = (0L until 12L).map { i =>
-      val bytes =
-        if (i == 5L) M.encodeBlockImage(0L) // byte copy
-        else if (i == 7L) M.resizeOne(M.encodeBlockImage(1L), 48, 48, "png")
-        else if (i == 9L) s"junk-$i".getBytes("UTF-8")
-        else M.encodeBlockImage(i)
-      (i, bytes)
-    }.toDF("id", "img")
-    def run(mode: String) = P.curateImages(imgs, "id", "img",
-      P.ImageConfig(maxDistance = 2, statsMode = mode))
-    def rows(r: graft.llm.Pipeline.Result) = r.stats.orderBy("ord").collect()
-      .map(x => (x.getInt(0), x.getString(1), x.getLong(2), x.getLong(3))).toSeq
-    val se = rows(run("exact"))
-    assert(se == rows(run("cheap")), "image pipeline cheap≠exact")
-    assert(rows(run("off")).forall(x => x._3 == -1L && x._4 == -1L))
-    val m = se.map(x => x._2 -> x._3).toMap
-    assert(m("decode_phash") == 11L && m("exact_dedup") == 10L &&
-      m("near_dedup") == 9L && m("resize") == 9L, m.toString)
-  }
+  import VideoPlant.{chunksFor, vid}
 
   // ------------------------------ id contract on the checkpointed input
 
@@ -208,8 +21,7 @@ class Round18Spec extends AnyFunSuite {
     val M = graft.llm.Multimodal
     val mediaA = Seq(M.encodeBlockImage(1L))
     def curate(df: org.apache.spark.sql.DataFrame) =
-      P.curateInterleavedMm(df, "doc_id", "text", Seq("image" -> "images"),
-        P.InterleavedConfig(statsMode = "cheap"))
+      P.curateInterleavedMm(df, "doc_id", "text", Seq("image" -> "images"))
     // One id duplicated only on a NULL-text row (dropped before the
     // checkpoint): must succeed — the r17 check aggregated raw docs and
     // spuriously failed this shape.
@@ -330,7 +142,7 @@ class Round18Spec extends AnyFunSuite {
 
     // Pipeline stage: docs 0-9 clean, 10-11 PII-dense (a contact dump) —
     // the gate drops exactly those two, and the stats frame shows the
-    // stage (cheap mode: the new stage's counts also ride observe).
+    // stage.
     def enGood(i: Long) =
       s"w${i}a the quick brown fox jumps over the lazy dog w${i}b " +
         s"it was good that it is here and now w${i}c"
@@ -342,7 +154,7 @@ class Round18Spec extends AnyFunSuite {
       (i, t)
     }.toDF("id", "text")
     val r = P.curate(docs, "id", "text",
-      cfg = P.Config(piiMaxDensity = Some(0.2), statsMode = "cheap"))
+      cfg = P.Config(piiMaxDensity = Some(0.2)))
     val byStage = r.stats.collect().map(x => x.getString(1) -> x.getLong(2)).toMap
     assert(byStage("quality_filter") == 12L, byStage.toString)
     assert(byStage("pii_filter") == 10L, byStage.toString)
@@ -352,8 +164,7 @@ class Round18Spec extends AnyFunSuite {
       array().cast("array<binary>")).withColumnRenamed("id", "doc_id")
     val r2 = P.curateInterleavedMm(mdocs, "doc_id", "text",
       Seq("image" -> "images"),
-      P.InterleavedConfig(text = P.Config(piiMaxDensity = Some(0.2)),
-        statsMode = "cheap"))
+      P.InterleavedConfig(text = P.Config(piiMaxDensity = Some(0.2))))
     val by2 = r2.stats.collect().map(x => x.getString(1) -> x.getLong(2)).toMap
     assert(by2("pii_filter") == 10L, by2.toString)
   }
