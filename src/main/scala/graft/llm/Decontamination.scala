@@ -135,18 +135,29 @@ object Decontamination {
       maxFusedGrams: Long = 50000000L): DataFrame = {
     require(n >= 1, s"n-gram width must be >= 1, got $n")
     require(!eval.isStreaming, "eval corpus must be a static frame")
-    // ONE Spark job decides the plan AND feeds the fused path: collect at
-    // most cap+1 grams — overflow means "too big, fall back to the join
-    // plan" without a separate count job (the old delegate-to-
-    // streamDecontaminate shape ran the eval shingle/distinct pipeline
-    // twice per call — r14 ADVICE). The limit bounds driver memory to the
-    // cap regardless of the true gram count.
-    val cap = math.min(maxFusedGrams, Int.MaxValue.toLong - 8L).toInt
+    // ONE Spark job decides the plan AND feeds the fused path.
+    evalGramsUpTo(eval, idCol, textCol, n, maxFusedGrams) match {
+      case Some(grams) => applyGramGuard(train, grams, textCol, n)
+      case None => decontaminate(train, eval, idCol, textCol, n)
+    }
+  }
+
+  /** `limit` takes an Int: larger caps clamp to just below Int.MaxValue. */
+  private def boundedCap(cap: Long): Int =
+    math.min(cap, Int.MaxValue.toLong - 8L).toInt
+
+  /** The eval corpus's distinct grams, or None when there are more than
+    * `cap`. ONE job collects at most cap + 1 grams: overflow means "too
+    * big" without a separate count job (a count-then-collect runs the eval
+    * shingle/distinct pipeline twice), and the limit bounds driver memory
+    * to the cap regardless of the true gram count. */
+  private def evalGramsUpTo(eval: DataFrame, idCol: String, textCol: String,
+      n: Int, cap: Long): Option[Array[Long]] = {
+    val c = boundedCap(cap)
     val grams = Dedup.shingleSets(eval, idCol, textCol, n)
       .select(explode(col("sh")).as("gram")).distinct()
-      .limit(cap + 1).collect().map(_.getLong(0))
-    if (grams.length <= cap) applyGramGuard(train, grams, textCol, n)
-    else decontaminate(train, eval, idCol, textCol, n)
+      .limit(c + 1).collect().map(_.getLong(0))
+    if (grams.length <= c) Some(grams) else None
   }
 
   /** The fused keep side shared by [[decontaminateAuto]] and
@@ -181,23 +192,19 @@ object Decontamination {
     * `maxEvalGrams` guards the driver collect: "benchmark-sized by
     * definition" is a contract, not an enforcement — a caller handing a
     * training-corpus-sized frame as `eval` would otherwise OOM the driver
-    * at plan build. The count-first gate (one cheap metadata-ish job over
-    * the gram pipeline) fails fast with the knob named instead; the
-    * default cap (~50M grams ≈ 400 MB of longs) is far above any real
-    * benchmark suite. Mirrors the union-find ≤1M-edge gate in [[Dedup]]. */
+    * at plan build. The bounded collect fails fast with the knob named
+    * instead; the default cap (~50M grams ≈ 400 MB of longs) is far above
+    * any real benchmark suite. Mirrors the union-find ≤1M-edge gate in [[Dedup]]. */
   def streamDecontaminate(stream: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, n: Int = 13, maxEvalGrams: Long = 50000000L): DataFrame = {
     require(!eval.isStreaming, "eval corpus must be a static frame")
-    val grams = Dedup.shingleSets(eval, idCol, textCol, n)
-      .select(explode(col("sh")).as("gram")).distinct()
-    val nGrams = grams.count()
-    require(nGrams <= maxEvalGrams,
-      s"streamDecontaminate would collect $nGrams distinct eval grams to the " +
-        s"driver (cap maxEvalGrams=$maxEvalGrams, ~8 bytes each). An eval corpus " +
-        "this large is usually a swapped argument; if intended, raise " +
-        "maxEvalGrams, or use the join-based batch path " +
-        "Decontamination.decontaminate, which never collects grams.")
-    val evalGrams: Array[Long] = grams.collect().map(_.getLong(0))
+    val evalGrams = evalGramsUpTo(eval, idCol, textCol, n, maxEvalGrams)
+      .getOrElse(throw new IllegalArgumentException(
+        s"streamDecontaminate would collect more than $maxEvalGrams distinct " +
+        s"eval grams to the driver (cap maxEvalGrams=$maxEvalGrams, ~8 bytes " +
+        "each). An eval corpus this large is usually a swapped argument; if " +
+        "intended, raise maxEvalGrams, or use the join-based batch path " +
+        "Decontamination.decontaminate, which never collects grams."))
     applyGramGuard(stream, evalGrams, textCol, n)
   }
 
@@ -215,15 +222,13 @@ object Decontamination {
       textCol: String, n: Int = 13, bitsPerKey: Int = 20,
       maxEvalGrams: Long = 200000000L): DataFrame = {
     require(!eval.isStreaming, "eval corpus must be a static frame")
-    val grams = Dedup.shingleSets(eval, idCol, textCol, n)
-      .select(explode(col("sh")).as("gram")).distinct()
-    val nGrams = grams.count()
-    require(nGrams <= maxEvalGrams,
-      s"bloomStreamDecontaminate would build a bloom over $nGrams distinct eval " +
-        s"grams (cap maxEvalGrams=$maxEvalGrams, ~$bitsPerKey bits each). An eval " +
-        "corpus this large is usually a swapped argument; if intended, raise " +
-        "maxEvalGrams, or use the join-based Decontamination.decontaminate.")
-    val evalGrams: Array[Long] = grams.collect().map(_.getLong(0))
+    val evalGrams = evalGramsUpTo(eval, idCol, textCol, n, maxEvalGrams)
+      .getOrElse(throw new IllegalArgumentException(
+        "bloomStreamDecontaminate would build a bloom over more than " +
+        s"$maxEvalGrams distinct eval grams (cap maxEvalGrams=$maxEvalGrams, " +
+        s"~$bitsPerKey bits each). An eval corpus this large is usually a " +
+        "swapped argument; if intended, raise maxEvalGrams, or use the " +
+        "join-based Decontamination.decontaminate."))
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val sh = graft.functions.ShingleSketch.sketch(toks, n, 0).getField("sh")
     val contaminated = graft.functions.SetKernels.anyInBloom(sh,
@@ -252,15 +257,16 @@ object Decontamination {
     require(!eval.isStreaming, "eval corpus must be a static frame")
     require(threshold > 0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
+    val cap = boundedCap(maxEvalVectors)
     val vecs = eval.select(col(vecCol).cast("array<double>").as("v"))
-      .where(col("v").isNotNull)
-    val n = vecs.count()
-    require(n <= maxEvalVectors,
-      s"semanticDecontaminate would collect $n eval embeddings to the driver " +
-        s"(cap maxEvalVectors=$maxEvalVectors, 8*dim bytes each). An eval corpus " +
-        "this large is usually a swapped argument; if intended, raise " +
-        "maxEvalVectors, or bucket with Dedup.nearDupCosineAgainst-style joins.")
-    val matrix = vecs.collect().map(_.getSeq[Double](0).toArray)
+      .where(col("v").isNotNull).limit(cap + 1).collect()
+    require(vecs.length <= cap,
+      s"semanticDecontaminate would collect more than $maxEvalVectors eval " +
+        s"embeddings to the driver (cap maxEvalVectors=$maxEvalVectors, 8*dim " +
+        "bytes each). An eval corpus this large is usually a swapped argument; " +
+        "if intended, raise maxEvalVectors, or bucket with " +
+        "Dedup.nearDupCosineAgainst-style joins.")
+    val matrix = vecs.map(_.getSeq[Double](0).toArray)
     val mc = graft.functions.CentroidKernels.maxCosine(col(vecCol), matrix)
     train.where(col(vecCol).isNull || coalesce(mc < threshold, lit(true)))
   }

@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Storage level for the candidate-mass checkpoints (banded frame,
+    * candidate pairs, verify shingles): serialized — the 100M-doc
+    * GC-ceiling decision (r14, [[capBuckets]]). */
+  private[llm] val CandLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
   /** Drop rows whose `keyCol` bucket exceeds `maxBucket` rows (pathological
     * buckets: empty docs, boilerplate, stop-shingles). Bucket sizes come from
     * a partial-aggregatable `groupBy(key).count()` — map-side combine
@@ -50,18 +56,6 @@ object Dedup {
     * MEMORY_AND_DISK_SER keeps each partition as a handful of byte
     * chunks instead; the frame is read exactly twice, sequentially, so
     * the deserialize-on-read cost is two cheap streaming passes. */
-  /** Storage level for the candidate-mass checkpoints (banded frame,
-    * candidate pairs, verify shingles): serialized by default — the 100M-doc
-    * GC-ceiling decision (r14, scaladoc below). The system property
-    * `graft.dedup.deserializedCheckpoints=true` flips them to plain
-    * MEMORY_AND_DISK: the measurement lever behind the r14→r15
-    * `q_dedup_minhash_cc` investigation (BENCH_NOTES r15) — at bench scale
-    * the ser/deser CPU is visible while heap never was the constraint. */
-  private[llm] val CandLevel: org.apache.spark.storage.StorageLevel =
-    if (java.lang.Boolean.getBoolean("graft.dedup.deserializedCheckpoints"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
   private def capBuckets(df: DataFrame, keyCol: String, maxBucket: Long,
       onDrops: (Long, Long) => Unit = null): DataFrame = {
     val mat = df.localCheckpoint(false, CandLevel)
@@ -1562,7 +1556,7 @@ object Dedup {
       explode(EditBlockKernel.probeKeys(col("etxt"), maxDist)).as("k"))
       .select(col("id_l"), col("txt_l"),
         col("k.seg").as("seg"), col("k.idx").as("idx"), col("k.ls").as("ls"))
-    segs.join(probes, Seq("seg", "idx", "ls"))
+    val pairs = segs.join(probes, Seq("seg", "idx", "ls"))
       .where(col("id_s") =!= col("id_l"))
       .select(
         least(col("id_s"), col("id_l")).as("id_a"),
@@ -1571,9 +1565,8 @@ object Dedup {
           .otherwise(col("txt_l")).as("txt_a"),
         when(col("id_s") < col("id_l"), col("txt_l"))
           .otherwise(col("txt_s")).as("txt_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("dist", levenshtein(col("txt_a"), col("txt_b"), maxDist))
-      .where(col("dist") >= 0)
+    graft.functions.Rewrite.thenKeep(pairs.dropDuplicates("id_a", "id_b"), "dist",
+        levenshtein(col("txt_a"), col("txt_b"), maxDist))(_ >= 0)
       .select(col("id_a"), col("id_b"), col("dist"))
   }
 }

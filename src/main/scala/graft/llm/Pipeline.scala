@@ -5,6 +5,7 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
+import graft.functions.Rewrite
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSql
@@ -191,9 +192,8 @@ object Pipeline {
     step("fix_encoding")(df => df.withColumn(textCol,
       graft.functions.NormalizeKernel.nfkc(
         graft.functions.MojibakeKernel.fixMojibake(col(textCol)))))
-    step("html_extract")(df => df
-      .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
+    step("html_extract")(df => Rewrite.thenKeep(df, textCol,
+      graft.functions.HtmlKernel.htmlToText(col(textCol)))(trim(_) =!= ""))
     step("langid_filter")(df => df.where(
       TextAnalysis.languageId(col(textCol)).isin(cfg.keepLangs.toSeq: _*)))
     step("quality_filter")(df => df.where(
@@ -224,9 +224,8 @@ object Pipeline {
         Seq(idCol), cfg.dsirN, ngrams = cfg.dsirNgrams, seed = cfg.seed)
         .drop("dsir_logw"))
     }
-    step("line_dedup")(df => df
-      .withColumn(textCol, TextAnalysis.removeRepeatedLines(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
+    step("line_dedup")(df => Rewrite.thenKeep(df, textCol,
+      TextAnalysis.removeRepeatedLines(col(textCol)))(trim(_) =!= ""))
     // Content-hash exact dedup with the deterministic keep-lowest-id rule
     // (plain dropDuplicates keeps an arbitrary row; pipelines must be
     // replayable).
@@ -615,20 +614,16 @@ object Pipeline {
             Multimodal.resizeImages(df, "__media", ic.targetW, ic.targetH,
               ic.resizeFormat, ic.batchSize).where(col("resized").isNotNull))
         case "audio" =>
-          stepMedia("aud_decode")(df => withMid(df)
-            .withColumn("ahash",
-              Multimodal.mediaSketch64(col("__media"), "audio_spectral"))
-            .where(col("ahash").isNotNull))
+          stepMedia("aud_decode")(df => Rewrite.thenKeep(withMid(df), "ahash",
+            Multimodal.mediaSketch64(col("__media"), "audio_spectral"))(_.isNotNull))
           stepMedia("aud_exact_dedup")(df => Dedup.exactKeepFirst(
             df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
             .drop("__fp"))
           stepMedia("aud_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
             "ahash", audioCfg.maxDistance, audioCfg.pieces, audioCfg.maxCorpus))
         case _ =>
-          stepMedia("vid_decode")(df => withMid(df)
-            .withColumn("vhash",
-              Multimodal.mediaSketch64(col("__media"), "video_payload"))
-            .where(col("vhash").isNotNull))
+          stepMedia("vid_decode")(df => Rewrite.thenKeep(withMid(df), "vhash",
+            Multimodal.mediaSketch64(col("__media"), "video_payload"))(_.isNotNull))
           stepMedia("vid_exact_dedup")(df => Dedup.exactKeepFirst(
             df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
             .drop("__fp"))

@@ -131,96 +131,62 @@ object Retrieval {
     (n, avgdl)
   }
 
-  private def readMetaBuckets(spark: SparkSession, path: String): Int = {
-    val meta = graft.io.FsText.read(spark, s"$path/meta.json")
+  private final case class Meta(nDocs: Long, avgdl: Double, nBuckets: Int)
+
+  /** The `meta.json` sidecar. Indexes written before the bucketed layout
+    * (no `n_buckets` field) read `nBuckets = 0`. */
+  private def readMeta(spark: SparkSession, path: String): Meta = {
+    val text = graft.io.FsText.read(spark, s"$path/meta.json")
       .getOrElse(throw new java.io.FileNotFoundException(
-        s"no BM25 index meta at $path/meta.json"))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
-    if (root.has("n_buckets")) root.get("n_buckets").asInt else 0
+        s"no BM25 index meta at $path/meta.json — not a graft BM25 index"))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+    Meta(root.get("n_docs").asLong, root.get("avgdl").asDouble,
+      if (root.has("n_buckets")) root.get("n_buckets").asInt else 0)
   }
 
-  /** Self-heal a df swap interrupted by a crash (r14 — the one window the
-    * append lifecycle left manual): [[appendToBm25Index]] merges document
-    * frequencies through `df._graft_append_tmp` → rename(df, df.__old) →
-    * rename(tmp, df) → delete(__old) → meta refresh. A crash between the
-    * two renames leaves the index with NO df directory; a crash before
-    * the final cleanup leaves `__old`/tmp residue and possibly a stale
-    * sidecar. Every such state is mechanically recoverable because the
-    * merged tmp is FULLY written (with `_SUCCESS`) before any rename
-    * begins: missing df + complete tmp ⇒ finish the swap and recompute
-    * the sidecar (dl/tf were appended before the swap, so the healed
-    * index equals the completed append); missing df + incomplete tmp ⇒
-    * restore `__old` (a retried append then fail-fasts on the id check —
-    * the documented rebuild signal); df + `__old` both present ⇒ the swap
-    * finished, drop leftovers and refresh the sidecar. Called by both
-    * [[loadIndex]] and [[appendToBm25Index]], so a crashed append is
-    * healed by whichever touches the index next. */
-  private def healDfSwap(spark: SparkSession, path: String): Unit =
-    healSwap(spark, path, "df", "df._graft_append_tmp", refreshMeta = true)
+  /** The bucket count of an index the incremental paths can maintain. */
+  private def bucketCount(spark: SparkSession, path: String): Int = {
+    val n = readMeta(spark, path).nBuckets
+    require(n >= 1,
+      s"index at $path predates the bucketed layout — rebuild with buildAndWriteIndex")
+    n
+  }
 
-  /** Heal the COMPACTION swaps the same way (r14 self-review): a crash
-    * between [[compactBm25Index]]'s two renames leaves the index with no
-    * `tf` (or `dl`) directory — which a subsequent [[appendToBm25Index]]
-    * would otherwise recreate holding ONLY its delta, silently dropping
-    * the corpus (parquet append to a missing path just creates it).
-    * Same forward/restore rule as the df heal, minus the sidecar refresh
-    * (compaction moves bytes, not statistics). */
-  private def healCompactSwaps(spark: SparkSession, path: String): Unit =
+  // Swap layout (graft.io.DirSwap): the append's df merge and the
+  // compaction's tf/dl rewrites are Spark parquet commits, so `_SUCCESS`
+  // marks each finished rewrite.
+  private val AppendTmp = "._graft_append_tmp"
+  private val CompactTmp = "._graft_compact_tmp"
+
+  /** Finish or undo a crashed [[compactBm25Index]] tf/dl rewrite or
+    * [[appendToBm25Index]] df merge ([[graft.io.DirSwap]]). Load, append
+    * and compaction heal first — in particular BEFORE an append could
+    * recreate a missing tf/dl holding only its delta. A df that now holds
+    * the merge gets its meta sidecar recomputed (dl was appended before
+    * the swap, so the healed index equals the completed append). */
+  private def healSwaps(spark: SparkSession, path: String): Unit = {
     Seq("tf", "dl").foreach(sub =>
-      healSwap(spark, path, sub, s"$sub._graft_compact_tmp", refreshMeta = false))
-
-  private def healSwap(spark: SparkSession, path: String, sub: String,
-      tmpName: String, refreshMeta: Boolean): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/$tmpName")
-    val old = new org.apache.hadoop.fs.Path(s"$path/$sub.__old")
-    val haveOld = fs.exists(old)
-    if (!haveOld) return // tmp-only residue is inert; the writer deletes it
-    val haveDir = fs.exists(dir)
-    if (!haveDir) {
-      val tmpComplete = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-      if (tmpComplete) {
-        if (!fs.rename(tmp, dir))
-          throw new java.io.IOException(
-            s"healSwap: rename $tmp -> $dir failed — original at $old")
-        fs.delete(old, true)
-        if (refreshMeta) writeMeta(spark, path, readMetaBuckets(spark, path))
-      } else {
-        if (!fs.rename(old, dir))
-          throw new java.io.IOException(s"healSwap: restore $old -> $dir failed")
-        fs.delete(tmp, true)
-      }
-    } else {
-      // Swap completed; cleanup (and meta refresh, for the df append
-      // swap) may not have. Idempotent.
-      fs.delete(old, true)
-      fs.delete(tmp, true)
-      if (refreshMeta) writeMeta(spark, path, readMetaBuckets(spark, path))
-    }
+      graft.io.DirSwap.heal(spark, s"$path/$sub", CompactTmp, "_SUCCESS"))
+    if (graft.io.DirSwap.heal(spark, s"$path/df", AppendTmp, "_SUCCESS"))
+      writeMeta(spark, path, readMeta(spark, path).nBuckets)
   }
 
   /** Reload a persisted index (no corpus access, no stats job — except
-    * when healing a crashed append's df swap first, see [[healDfSwap]]).
-    * Indexes written before the bucketed layout (no `n_buckets` field)
-    * load with `nBuckets = 0` and score unpruned. */
+    * when healing a crashed swap first, see [[healSwaps]]). Indexes
+    * written before the bucketed layout load with `nBuckets = 0` and
+    * score unpruned. */
   def loadIndex(spark: SparkSession, path: String): Bm25Index = {
     // Heal only when no LIVE writer holds the index (r15): a held lock
     // means the transitional tf/df/dl state belongs to an in-flight
     // append/compaction, and "healing" it here would race that writer's
     // own renames. A crashed writer's stale lock self-breaks.
     graft.io.WriterLock.ifAcquired(spark, path, "loadIndex-heal") {
-      healDfSwap(spark, path)
-      healCompactSwaps(spark, path)
+      healSwaps(spark, path)
     }
-    val meta = graft.io.FsText.read(spark, s"$path/meta.json")
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no BM25 index meta at $path/meta.json"))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
-    val nBuckets = if (root.has("n_buckets")) root.get("n_buckets").asInt else 0
+    val meta = readMeta(spark, path)
     Bm25Index(spark.read.parquet(s"$path/tf"),
       spark.read.parquet(s"$path/dl"), spark.read.parquet(s"$path/df"),
-      root.get("n_docs").asLong, root.get("avgdl").asDouble, nBuckets)
+      meta.nDocs, meta.avgdl, meta.nBuckets)
   }
 
   /** Incrementally ingest `newDocs` into a persisted index: the delta
@@ -239,16 +205,8 @@ object Retrieval {
       path: String, checkIds: Boolean = true): Bm25Index = {
     val spark = newDocs.sparkSession
     graft.io.WriterLock.withLock(spark, path, "appendToBm25Index") {
-    healDfSwap(spark, path) // a crashed prior append must not be read as-is
-    healCompactSwaps(spark, path) // nor may a crashed compaction's missing
-    // tf/dl be recreated by this append's parquet-append as delta-only dirs
-    val meta = graft.io.FsText.read(spark, s"$path/meta.json")
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no BM25 index meta at $path/meta.json — not a graft BM25 index"))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
-    val nBuckets = if (root.has("n_buckets")) root.get("n_buckets").asInt else 0
-    require(nBuckets >= 1,
-      s"index at $path predates the bucketed layout — rebuild with buildAndWriteIndex")
+    healSwaps(spark, path)
+    val nBuckets = bucketCount(spark, path)
     val delta = tfRows(newDocs, idCol, textCol).withColumn("tb", bucketOf(nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
@@ -271,15 +229,8 @@ object Retrieval {
       // the retry path or buildAndWriteIndex; duplicated postings are not.)
       delta.groupBy("doc_id").agg(max("dl").as("dl"))
         .write.mode("append").parquet(s"$path/dl")
-      // Vocab-sized df merge, swapped in atomically (the compaction idiom:
-      // temp write, move-aside, rename; stale residue deleted up front).
-      val dfDir = new org.apache.hadoop.fs.Path(s"$path/df")
-      val fs = dfDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/df._graft_append_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$path/df.__old")
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      val merged = spark.read.parquet(dfDir.toString)
+      // Vocab-sized df merge, swapped in through graft.io.DirSwap.
+      val merged = spark.read.parquet(s"$path/df")
         .select(col("term"), col("df").cast("long").as("df"), col("tb"))
         .unionByName(delta.groupBy("tb", "term").agg(count(lit(1)).as("df"))
           .select(col("term"), col("df"), col("tb")))
@@ -291,20 +242,12 @@ object Retrieval {
       // appended (a retry fail-fasts on checkIds), tf either unchanged or
       // fully committed, tmp residue inert — exactly the states the heal
       // path already handles for the sequential order.
-      graft.io.Par.both(
-        writeBucketSorted(delta, s"$path/tf", overwrite = false),
-        writeBucketSorted(merged, tmp.toString, overwrite = true))
-      if (!fs.rename(dfDir, old))
-        throw new java.io.IOException(
-          s"appendToBm25Index: could not move $dfDir aside; merged df left at $tmp")
-      if (!fs.rename(tmp, dfDir)) {
-        val restored = fs.rename(old, dfDir)
-        throw new java.io.IOException(
-          s"appendToBm25Index: rename $tmp -> $dfDir failed; " + (
-            if (restored) "original df restored"
-            else s"restore ALSO failed — original preserved at $old, merged at $tmp"))
+      graft.io.DirSwap.replace(spark, s"$path/df", AppendTmp,
+          "appendToBm25Index") { tmp =>
+        graft.io.Par.both(
+          writeBucketSorted(delta, s"$path/tf", overwrite = false),
+          writeBucketSorted(merged, tmp, overwrite = true))
       }
-      fs.delete(old, true)
       writeMeta(spark, path, nBuckets)
       loadIndex(spark, path)
     } finally delta.unpersist()
@@ -321,12 +264,8 @@ object Retrieval {
     * per bucket (terms salt WITHIN a bucket when filesPerBucket > 1, so
     * a term's postings still land in one file and the In(term) row-group
     * pushdown keeps its skip rate), and `dl` to `dlFiles` files, each
-    * through a SIBLING temp directory + rename swap (write-over-read
-    * would corrupt the lazily-scanned index mid-job; a crash leaves a
-    * complete index at the path or recoverable `.__old` residue, and
-    * [[healCompactSwaps]] finishes-forward or restores it on the next
-    * load/append/compact — in particular BEFORE any append can recreate
-    * a missing tf/dl directory as a delta-only shell).
+    * through a [[graft.io.DirSwap]] (crashes heal on the next
+    * load/append/compact, see [[healSwaps]]).
     * `df` never accretes — each append rewrites it
     * whole through its own swap — and the meta sidecar is untouched
     * (compaction moves bytes, not statistics). Single-writer-ness is
@@ -342,61 +281,31 @@ object Retrieval {
     require(filesPerBucket >= 1 && dlFiles >= 1,
       s"bad filesPerBucket=$filesPerBucket / dlFiles=$dlFiles")
     graft.io.WriterLock.withLock(spark, path, "compactBm25Index") {
-    healDfSwap(spark, path)
-    healCompactSwaps(spark, path)
-    require(readMetaBuckets(spark, path) >= 1,
-      s"index at $path predates the bucketed layout — rebuild with buildAndWriteIndex")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val fs = p.getFileSystem(conf)
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val nm = it.next().getPath.getName
-        if (!nm.startsWith("_") && !nm.startsWith(".")) n += 1
-      }
-      n
-    }
-    def swapIn(dir: org.apache.hadoop.fs.Path, write: String => Unit): Unit = {
-      val fs = dir.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(dir.getParent,
-        dir.getName + "._graft_compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(dir.getParent, dir.getName + ".__old")
-      fs.delete(tmp, true) // residue of a crashed earlier compaction
-      fs.delete(old, true)
-      write(tmp.toString)
-      if (!fs.rename(dir, old))
-        throw new java.io.IOException(
-          s"compactBm25Index: could not move $dir aside; rewrite left at $tmp")
-      if (!fs.rename(tmp, dir)) {
-        val restored = fs.rename(old, dir)
-        throw new java.io.IOException(
-          s"compactBm25Index: rename $tmp -> $dir failed; " + (
-            if (restored) "original restored"
-            else s"restore ALSO failed — original preserved at $old, rewrite at $tmp"))
-      }
-      fs.delete(old, true)
-    }
-    val tfDir = new org.apache.hadoop.fs.Path(s"$path/tf")
-    val dlDir = new org.apache.hadoop.fs.Path(s"$path/dl")
-    val before = dataFiles(tfDir) + dataFiles(dlDir)
-    val tf = spark.read.parquet(tfDir.toString)
-    val dl = spark.read.parquet(dlDir.toString)
+    healSwaps(spark, path)
+    bucketCount(spark, path)
+    def dataFiles() = Seq("tf", "dl")
+      .map(sub => graft.io.DirSwap.dataFiles(spark, s"$path/$sub")).sum
+    val before = dataFiles()
+    val tf = spark.read.parquet(s"$path/tf")
+    val dl = spark.read.parquet(s"$path/dl")
     // The tf and dl rewrites touch disjoint directories with no ordering
-    // contract between them (each swap is individually crash-recoverable
-    // by healCompactSwaps) — overlap the two rewrite jobs (guide §2.6, r19).
+    // contract between them (each swap is individually crash-recoverable)
+    // — overlap the two rewrite jobs (guide §2.6, r19).
     graft.io.Par.both(
-      swapIn(tfDir, tmp => {
+      graft.io.DirSwap.replace(spark, s"$path/tf", CompactTmp,
+          "compactBm25Index") { tmp =>
         val keyed =
           if (filesPerBucket == 1) tf.repartition(col("tb"))
           else tf.repartition(col("tb"),
             pmod(xxhash64(col("term")), lit(filesPerBucket.toLong)))
         keyed.sortWithinPartitions("tb", "term")
           .write.mode("overwrite").partitionBy("tb").parquet(tmp)
-      }),
-      swapIn(dlDir, tmp =>
-        dl.repartition(dlFiles).write.mode("overwrite").parquet(tmp)))
-    (before, dataFiles(tfDir) + dataFiles(dlDir))
+      },
+      graft.io.DirSwap.replace(spark, s"$path/dl", CompactTmp,
+          "compactBm25Index") { tmp =>
+        dl.repartition(dlFiles).write.mode("overwrite").parquet(tmp)
+      })
+    (before, dataFiles())
     }
   }
 

@@ -831,8 +831,7 @@ object Similarity {
       meta: IvfPqMeta, dir: String): Unit = {
     val spark = newRows.sparkSession
     graft.io.WriterLock.withLock(spark, dir, "appendToIvfPqIndex") {
-    healIvfCompactSwap(spark, dir) // a crashed compaction's missing dir must
-    // not be recreated by this append as a delta-only shell
+    graft.io.DirSwap.heal(spark, dir, CompactTmp, SidecarFile)
     val adopted = readMetaSidecar(spark, dir) match {
       case Some(e) => Some(e)
       case None =>
@@ -866,18 +865,10 @@ object Similarity {
     * shuffles each cell's rows into `filesPerCell` tasks (repartition by
     * the partition column + a salt), so the dynamic-partition write emits
     * at most `filesPerCell` files per cell, and rewrites the index through
-    * a SIBLING temp directory plus a rename swap — Spark reads lazily, so
-    * writing over the path still being scanned would corrupt the index
-    * mid-job. The swap renames the OLD dir aside before moving the
-    * rewrite into place and deletes it only once the new dir is live, so
-    * a crash at any point leaves a complete index on disk (at `dir`, or
-    * recoverable from the `.__old`/`._graft_compact_tmp` sibling) — never
-    * an empty serving path. Renames are atomic on rename-capable
-    * filesystems (HDFS, local); object stores with copy-based renames
-    * widen the windows. Single-writer-ness is ENFORCED (r15): append and
-    * compact both run under the sibling [[graft.io.WriterLock]] lock
-    * file, so an appendToIvfPqIndex racing a compaction fails fast with a
-    * named [[graft.io.WriterLock.ConcurrentWriterException]] instead of
+    * a [[graft.io.DirSwap]]. Single-writer-ness is ENFORCED (r15): write,
+    * append and compact all run under the sibling [[graft.io.WriterLock]]
+    * lock file, so an appendToIvfPqIndex racing a compaction fails fast
+    * with a named [[graft.io.WriterLock.ConcurrentWriterException]] instead of
     * landing its batch in the old dir after the listing snapshot and
     * being discarded with it (a crashed writer's stale lock self-breaks).
     * Probes racing a compaction should still read a snapshot path. Meta
@@ -895,41 +886,15 @@ object Similarity {
       dir: String, filesPerCell: Int = 1): (Long, Long) = {
     require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
     graft.io.WriterLock.withLock(spark, dir, "compactIvfPqIndex") {
-    healIvfCompactSwap(spark, dir) // explicit: readIvfPqIndex's own heal
-    // skips under the lock we hold
+    // Explicit: readIvfPqIndex's own heal skips under the lock we hold.
+    graft.io.DirSwap.heal(spark, dir, CompactTmp, SidecarFile)
     val (indexed, meta) = readIvfPqIndex(spark, dir)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val nm = f.getPath.getName
-        if (!nm.startsWith("_") && !nm.startsWith(".")) n += 1
-      }
-      n
-    }
-    val before = dataFiles(dirPath)
-    val tmp = new org.apache.hadoop.fs.Path(dirPath.getParent,
-      dirPath.getName + "._graft_compact_tmp")
-    fs.delete(tmp, true) // a crashed earlier compaction leaves one behind
-    writeIvfPqIndex(indexed, meta, tmp.toString, filesPerCell)
-    val old = new org.apache.hadoop.fs.Path(dirPath.getParent,
-      dirPath.getName + ".__old")
-    fs.delete(old, true) // residue of a crashed earlier compaction
-    if (!fs.rename(dirPath, old))
-      throw new java.io.IOException(
-        s"compactIvfPqIndex: could not move $dir aside; compacted index left at $tmp")
-    if (!fs.rename(tmp, dirPath)) {
-      val restored = fs.rename(old, dirPath) // best-effort restore
-      throw new java.io.IOException(
-        s"compactIvfPqIndex: rename $tmp -> $dir failed; " + (
-          if (restored) "original index restored"
-          else s"restore ALSO failed — original preserved at $old, compacted at $tmp"))
-    }
-    fs.delete(old, true)
-    (before, dataFiles(dirPath))
+    val before = graft.io.DirSwap.dataFiles(spark, dir)
+    // The tmp is written without its own lock: the lock on `dir` covers
+    // it, and a crash then leaves no stale lock next to the tmp.
+    graft.io.DirSwap.replace(spark, dir, CompactTmp, "compactIvfPqIndex")(
+      tmp => writeIndexFiles(indexed, meta, tmp, filesPerCell))
+    (before, graft.io.DirSwap.dataFiles(spark, dir))
     }
   }
 
@@ -953,9 +918,18 @@ object Similarity {
     * single write task — a straggler/spill risk the bare unclustered
     * write did not have. For large builds derive it from expected
     * rows-per-cell (≈ totalRows / nCells / targetRowsPerFile), or keep 1
-    * when cells are balanced (ADVICE r18; the bench-scale indexes are). */
+    * when cells are balanced (ADVICE r18; the bench-scale indexes are).
+    *
+    * Runs under the [[graft.io.WriterLock]] on `dir`, like append and
+    * compact: an overwrite racing them would silently drop a batch. */
   def writeIvfPqIndex(indexed: DataFrame, meta: IvfPqMeta, dir: String,
-      filesPerCell: Int = 1): Unit = {
+      filesPerCell: Int = 1): Unit =
+    graft.io.WriterLock.withLock(indexed.sparkSession, dir, "writeIvfPqIndex") {
+      writeIndexFiles(indexed, meta, dir, filesPerCell)
+    }
+
+  private def writeIndexFiles(indexed: DataFrame, meta: IvfPqMeta, dir: String,
+      filesPerCell: Int): Unit = {
     require(filesPerCell >= 1, s"filesPerCell must be >= 1, got $filesPerCell")
     val clustered =
       if (filesPerCell == 1) indexed.repartition(col("centroid_idx"))
@@ -965,8 +939,10 @@ object Similarity {
     writeMetaSidecar(indexed.sparkSession, dir, meta)
   }
 
+  private val SidecarFile = "_graft_ivfpq_meta.json"
+
   private def sidecarPath(dir: String): String =
-    new org.apache.hadoop.fs.Path(dir, "_graft_ivfpq_meta.json").toString
+    new org.apache.hadoop.fs.Path(dir, SidecarFile).toString
 
   /** Sidecar write through the SAME filesystem as the parquet — an
     * hdfs://-or-s3a:// index directory must carry its metadata too, not
@@ -987,46 +963,13 @@ object Similarity {
       dir: String): Option[IvfPqMeta] =
     graft.io.FsText.read(spark, sidecarPath(dir)).map(IvfPqMeta.fromJson)
 
-  /** Self-heal a [[compactIvfPqIndex]] swap interrupted by a crash (r15 —
-    * the [[graft.llm.Retrieval]] healCompactSwaps symmetry this side was
-    * missing): a crash between the two renames leaves NO directory at the
-    * serving path (readIvfPqIndex throws, appends would recreate a
-    * delta-only shell), with the original preserved at `.__old`. The
-    * rewrite at `._graft_compact_tmp` is COMPLETE exactly when it carries
-    * the meta sidecar ([[writeIvfPqIndex]] writes it after the parquet
-    * commit): complete tmp ⇒ finish the swap forward; incomplete ⇒
-    * restore the original. Both-present ⇒ the swap finished, drop
-    * leftovers. Runs under the writer lock at every entry point (held by
-    * append/compact; opportunistic on read), so it never races a LIVE
-    * writer's own renames. */
-  private def healIvfCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dirPath.getParent,
-      dirPath.getName + "._graft_compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(dirPath.getParent,
-      dirPath.getName + ".__old")
-    if (!fs.exists(old)) return // tmp-only residue is inert; compact deletes it
-    if (!fs.exists(dirPath)) {
-      val tmpComplete = fs.exists(
-        new org.apache.hadoop.fs.Path(tmp, "_graft_ivfpq_meta.json"))
-      if (tmpComplete) {
-        if (!fs.rename(tmp, dirPath))
-          throw new java.io.IOException(
-            s"healIvfCompactSwap: rename $tmp -> $dirPath failed — original at $old")
-        fs.delete(old, true)
-      } else {
-        if (!fs.rename(old, dirPath))
-          throw new java.io.IOException(
-            s"healIvfCompactSwap: restore $old -> $dirPath failed")
-        fs.delete(tmp, true)
-      }
-    } else {
-      fs.delete(old, true)
-      fs.delete(tmp, true)
-    }
-  }
+  // Swap layout (graft.io.DirSwap). Read, append and compact heal a
+  // crashed compaction first, so no append recreates a missing `dir` as a
+  // delta-only shell. The completion file is the sidecar, not `_SUCCESS`:
+  // the parquet commit writes `_SUCCESS` BEFORE writeIndexFiles writes the
+  // sidecar, so a `_SUCCESS`-only heal would move a sidecar-less rewrite
+  // forward and delete the original.
+  private val CompactTmp = "._graft_compact_tmp"
 
   /** Reload a persisted index: the `(neighbor_id, centroid_idx, pq_codes)`
     * table (cell as partition column) + metadata. Heals a crashed
@@ -1034,7 +977,7 @@ object Similarity {
   def readIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, IvfPqMeta) = {
     graft.io.WriterLock.ifAcquired(spark, dir, "readIvfPqIndex-heal") {
-      healIvfCompactSwap(spark, dir)
+      graft.io.DirSwap.heal(spark, dir, CompactTmp, SidecarFile)
     }
     val meta = readMetaSidecar(spark, dir).getOrElse(throw new
       java.io.FileNotFoundException(

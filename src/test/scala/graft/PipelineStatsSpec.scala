@@ -114,6 +114,42 @@ class PipelineStatsSpec extends AnyFunSuite {
     assert(survivors(disk) == survivors(dflt))
   }
 
+  test("curateInterleavedMm: each rewrite-then-filter stage runs its kernel once") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"plan_marker_${System.nanoTime()}"
+    spark.listenerManager.register(listener)
+    try {
+      runMm()
+      // Listener events arrive in order: once the marker query's plan is
+      // in, so is every stage checkpoint's before it.
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.asScala.exists(_.output.exists(_.name == marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val kernels: Seq[(String, Expression => Boolean)] = Seq(
+      "html_extract" -> (_.prettyName == "graft_html_text"),
+      "line_dedup" -> (e => e.prettyName == "array_join" &&
+        e.children.headOption.exists(_.prettyName == "array_distinct")),
+      "aud_decode" -> (_.prettyName == "graft_media_sketch64_audio_spectral"),
+      "vid_decode" -> (_.prettyName == "graft_media_sketch64_video_payload"))
+    // The most copies of each stage's kernel in any one plan.
+    val copies = kernels.map { case (stage, is) =>
+      stage -> plans.asScala.map(RewriteSpec.kernelCount(_, is)).max
+    }.toMap
+    assert(copies.values.forall(_ == 1), copies)
+  }
+
   // -------------------------------------------------------------- curate
 
   test("curate: planted drops, token sums > 0, final stage matches the curated docs") {

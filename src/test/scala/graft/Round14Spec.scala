@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 additions: BM25 index compaction, crash-healing of the df
-  * swap, and the full-64-AC-bit pHash. */
+/** Round-14 additions: BM25 index compaction and the full-64-AC-bit
+  * pHash (the crash-heal tests live in IndexSwapSpec). */
 class Round14Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -50,105 +50,6 @@ class Round14Spec extends AnyFunSuite {
       graft.llm.Retrieval.compactBm25Index(spark, dir.toString, dlFiles = 2)
       val again = scoreMap(graft.llm.Retrieval.loadIndex(spark, dir.toString), qs)
       assert(again === after)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  // --------------------------------------------- df-swap crash healing
-
-  test("healDfSwap: a crash between the swap renames self-heals forward") {
-    val qs = Seq((1L, "t1 t7 t13 t25")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("r14_bm25_heal_fwd")
-    val dirR = java.nio.file.Files.createTempDirectory("r14_bm25_heal_ref")
-    try {
-      graft.llm.Retrieval.buildAndWriteIndex(docs(0, 300), "id", "text",
-        dir.toString, nBuckets = 8)
-      graft.llm.Retrieval.appendToBm25Index(docs(300, 400), "id", "text",
-        dir.toString)
-      val want = scoreMap(graft.llm.Retrieval.buildAndWriteIndex(
-        docs(0, 400), "id", "text", dirR.toString, nBuckets = 8), qs)
-      // Simulate the crash window between rename(df, __old) and
-      // rename(tmp, df): the COMPLETE merged df sits at the tmp name
-      // (with its _SUCCESS), the previous df at __old, nothing at df.
-      val fs = new org.apache.hadoop.fs.Path(dir.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val df = new org.apache.hadoop.fs.Path(s"$dir/df")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/df._graft_append_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/df.__old")
-      assert(fs.rename(df, tmp))
-      assert(fs.mkdirs(old)) // stale pre-append df (content irrelevant)
-      // loadIndex must finish the swap and score exactly like the rebuild.
-      val healed = graft.llm.Retrieval.loadIndex(spark, dir.toString)
-      assert(fs.exists(df) && !fs.exists(tmp) && !fs.exists(old))
-      val got = scoreMap(healed, qs)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, s"$k") }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(dirR.toFile)
-    }
-  }
-
-  test("healDfSwap: an incomplete merged df restores the original") {
-    val qs = Seq((1L, "t1 t7 t13 t25")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("r14_bm25_heal_back")
-    try {
-      val built = graft.llm.Retrieval.buildAndWriteIndex(docs(0, 300), "id",
-        "text", dir.toString, nBuckets = 8)
-      val want = scoreMap(built, qs)
-      // Simulate a crash DURING the merged-df write: df moved aside,
-      // tmp exists but has no _SUCCESS marker.
-      val fs = new org.apache.hadoop.fs.Path(dir.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val df = new org.apache.hadoop.fs.Path(s"$dir/df")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/df._graft_append_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/df.__old")
-      assert(fs.rename(df, old))
-      assert(fs.mkdirs(tmp)) // partial write, no _SUCCESS
-      val healed = graft.llm.Retrieval.loadIndex(spark, dir.toString)
-      assert(fs.exists(df) && !fs.exists(tmp) && !fs.exists(old))
-      val got = scoreMap(healed, qs)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, s"$k") }
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  test("healCompactSwaps: a crashed tf compaction heals before load OR append") {
-    val qs = Seq((1L, "t1 t7 t13 t25")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("r14_bm25_heal_tf")
-    try {
-      graft.llm.Retrieval.buildAndWriteIndex(docs(0, 300), "id", "text",
-        dir.toString, nBuckets = 8)
-      val want = scoreMap(graft.llm.Retrieval.loadIndex(spark, dir.toString), qs)
-      val fs = new org.apache.hadoop.fs.Path(dir.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tf = new org.apache.hadoop.fs.Path(s"$dir/tf")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/tf._graft_compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/tf.__old")
-      // Crash window A: between the two renames with a COMPLETE rewrite
-      // at the tmp name — heal must finish forward.
-      assert(fs.rename(tf, tmp)) // the rewrite is complete (has _SUCCESS)
-      assert(fs.mkdirs(old))
-      val healed = graft.llm.Retrieval.loadIndex(spark, dir.toString)
-      assert(fs.exists(tf) && !fs.exists(tmp) && !fs.exists(old))
-      val got = scoreMap(healed, qs)
-      assert(got.keySet === want.keySet)
-      got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, s"$k") }
-      // Crash window B: rewrite incomplete (no _SUCCESS), tf moved aside.
-      // Without healing, the subsequent APPEND would recreate tf holding
-      // only its delta — the silent-corpus-drop path the heal closes.
-      assert(fs.rename(tf, old))
-      assert(fs.mkdirs(tmp))
-      graft.llm.Retrieval.appendToBm25Index(docs(300, 350), "id", "text",
-        dir.toString)
-      assert(fs.exists(tf) && !fs.exists(tmp) && !fs.exists(old))
-      val full = scoreMap(graft.llm.Retrieval.loadIndex(spark, dir.toString), qs)
-      val dirR = java.nio.file.Files.createTempDirectory("r14_bm25_heal_tf_ref")
-      try {
-        val ref = scoreMap(graft.llm.Retrieval.buildAndWriteIndex(
-          docs(0, 350), "id", "text", dirR.toString, nBuckets = 8), qs)
-        assert(full.keySet === ref.keySet)
-        full.foreach { case (k, v) => assert(math.abs(v - ref(k)) < 1e-9, s"$k") }
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(dirR.toFile)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 

@@ -135,44 +135,6 @@ class Round15Spec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
-  test("healIvfCompactSwap: crashed compaction states finish forward or restore on next read") {
-    val dir = java.nio.file.Files.createTempDirectory("r15_ivf_heal")
-    val idx = dir.toString + "/ivf"
-    try {
-      val vecs = spark.range(0, 400).toDF("id").withColumn("v",
-        array((0 until 8).map(k =>
-          (pmod(xxhash64(col("id"), lit(k)), lit(100)) / 50.0 - 1.0)): _*))
-      val (_, meta) = graft.llm.Similarity.buildIvfPqIndex(vecs, "id", "v",
-        nCentroids = 4, m = 2, ksub = 8)
-      graft.llm.Similarity.appendToIvfPqIndex(vecs, "id", "v", meta, idx)
-      val before = graft.llm.Similarity.readIvfPqIndex(spark, idx)._1.count()
-      val p = new org.apache.hadoop.fs.Path(idx)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "._graft_compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".__old")
-      // State 1: crash BETWEEN the renames with a COMPLETE rewrite — dir
-      // gone, old = original, tmp = finished compaction (sidecar present).
-      // Heal must finish forward.
-      assert(fs.rename(p, tmp))
-      fs.mkdirs(old)
-      val (dfF, _) = graft.llm.Similarity.readIvfPqIndex(spark, idx)
-      assert(dfF.count() == before)
-      assert(fs.exists(p) && !fs.exists(tmp) && !fs.exists(old))
-      // State 2: crash with an INCOMPLETE rewrite — dir gone, old =
-      // original, tmp lacks the sidecar. Heal must restore the original.
-      assert(fs.rename(p, old))
-      fs.mkdirs(tmp) // sidecar-less shell
-      val (dfR, _) = graft.llm.Similarity.readIvfPqIndex(spark, idx)
-      assert(dfR.count() == before)
-      assert(fs.exists(p) && !fs.exists(tmp) && !fs.exists(old))
-      // State 3: crash AFTER the swap, before cleanup — both present.
-      fs.mkdirs(old)
-      fs.mkdirs(tmp)
-      assert(graft.llm.Similarity.readIvfPqIndex(spark, idx)._1.count() == before)
-      assert(!fs.exists(tmp) && !fs.exists(old))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
   // --------------------------------------------- video allocation bounds
 
   test("videoHashOne: compact stsz at uniform=1 with cnt ~ file length nulls (absolute sample cap)") {
